@@ -11,9 +11,18 @@ module is that idea at its smallest:
 
 - data files stage under ``data/<commit-uuid>/`` (never visible until
   published);
-- a commit publishes manifest ``_manifest/v{N}.json`` naming every
-  live file (full-snapshot manifests — O(files) per commit; real
-  formats append deltas + checkpoints, same semantics);
+- a commit publishes manifest ``_manifest/v{N}.json``: at v1, every
+  ``CHECKPOINT_EVERY``-th version and every rewrite or rename, a
+  CHECKPOINT — the full state, with keys ``version``, ``files``,
+  ``schema``, ``commit``, ``added_at``, ``deletes``, ``run_ids``,
+  ``stats``, ``ts`` (plus ``bloom_refs``/``bloom_meta`` and
+  ``field_ids``/``file_fields`` once a table has them); otherwise a
+  DELTA ``{version, delta, ts}`` of O(this commit) bytes, whose
+  ``delta["kind"]`` is one of ``append``, ``rewrite``, ``replace``,
+  ``delete``, ``upsert``, ``rename``.  ``_apply_delta`` is the one
+  transition from a state and a delta to the next state: the writer
+  derives every checkpoint through it and readers replay deltas
+  through it;
 - publishing goes through ``CommitBackend`` (r14): publish-if-absent
   of the complete manifest at the versioned key — EXCLUSIVE (two
   racing writers cannot both win version N; the loser re-reads and
@@ -371,14 +380,11 @@ def _merge_schema(cur_json: str | None, new_json: str) -> str:
     from pyspark.sql.types import StructField, StructType
 
     new_s = StructType.fromJson(json.loads(new_json))
-    if cur_json is None:
-        merged = StructType(
-            [StructField(f.name, f.dataType, True) for f in new_s.fields]
-        )
-        return json.dumps(merged.jsonValue())
-    cur_s = StructType.fromJson(json.loads(cur_json))
-    by_name = {f.name: f for f in cur_s.fields}
-    out = [StructField(f.name, f.dataType, True) for f in cur_s.fields]
+    cur_fields = (
+        StructType.fromJson(json.loads(cur_json)).fields if cur_json else []
+    )
+    by_name = {f.name: f for f in cur_fields}
+    out = [StructField(f.name, f.dataType, True) for f in cur_fields]
     for f in new_s.fields:
         have = by_name.get(f.name)
         if have is None:
@@ -394,14 +400,21 @@ def _merge_schema(cur_json: str | None, new_json: str) -> str:
 
 def _schema_of(m: dict):
     """The manifest's recorded table schema as a StructType, or None
-    for legacy tables (pre-schema-tracking) — readers then fall back
-    to parquet self-description."""
-    sj = m.get("schema")
+    for a table whose commits never recorded one (``_publish`` driven
+    without a schema) — readers then fall back to parquet
+    self-description."""
+    sj = m["schema"]
     if sj is None:
         return None
     from pyspark.sql.types import StructType
 
     return StructType.fromJson(json.loads(sj))
+
+
+def _field_names(schema_json: str) -> list[str]:
+    from pyspark.sql.types import StructType
+
+    return [f.name for f in StructType.fromJson(json.loads(schema_json)).fields]
 
 
 def _json_stat(v):
@@ -413,6 +426,14 @@ def _json_stat(v):
     return v.isoformat() if hasattr(v, "isoformat") else v
 
 
+# Keys every checkpoint (full manifest) carries besides ``version``,
+# ``files`` and ``run_ids``.  A full manifest lacking one predates the
+# delta format (r14) and is refused by name rather than half-read.
+_CHECKPOINT_KEYS = frozenset(
+    {"added_at", "commit", "deletes", "schema", "stats", "ts"}
+)
+
+
 def _read_manifest(
     root: str, version: int, backend: CommitBackend | None = None
 ) -> dict:
@@ -421,23 +442,33 @@ def _read_manifest(
     FaultInjectingBackend scenario); on the local backend a torn
     manifest is impossible (link-after-complete-write), so a parse
     failure there surfaces on the last attempt as the genuine
-    corruption it is."""
+    corruption it is.  A full manifest missing any of
+    ``_CHECKPOINT_KEYS`` raises ``ValueError`` naming the version and
+    the keys."""
     b = backend or _LOCAL_BACKEND
-    last: ValueError | None = None
     for attempt in range(3):
         try:
-            return json.loads(b.read(root, version))
-        except ValueError as e:
-            last = e
-            if attempt < 2:
-                import time
+            m = json.loads(b.read(root, version))
+            break
+        except ValueError:
+            if attempt == 2:
+                raise
+            import time
 
-                time.sleep(0.01)
-    raise last
+            time.sleep(0.01)
+    if "files" in m:
+        missing = sorted(_CHECKPOINT_KEYS - m.keys())
+        if missing:
+            raise ValueError(
+                f"manifest v{version} of {root} lacks {missing}: it "
+                "predates the current manifest format, which this "
+                "reader no longer accepts"
+            )
+    return m
 
 
-# Every Nth commit (and every rewrite, and v1) publishes a FULL
-# snapshot manifest (a checkpoint); the commits in between publish
+# Every Nth commit (and every rewrite and rename, and v1) publishes a
+# FULL snapshot manifest (a checkpoint); the commits in between publish
 # only their DELTA.  This is what caps commit write amplification:
 # full-snapshot-per-commit costs O(live files) of JSON per append —
 # at 100k files that is a multi-MB write for a one-file commit —
@@ -447,148 +478,127 @@ def _read_manifest(
 # actions is the same structure).
 CHECKPOINT_EVERY = 8
 
+# The state of a table with no commits: what v1 is derived from.
+_EMPTY_STATE = {
+    "files": [], "added_at": {}, "deletes": [], "stats": {},
+    "schema": None, "run_ids": [], "ts": 0.0,
+}
 
-def _rename_fields_json(schema_json: str | None, renames: dict) -> str | None:
-    """Apply a name->name rename map to a recorded schema JSON."""
-    if schema_json is None:
-        return None
+
+def _apply_rename(state: dict, renames: dict) -> dict:
+    """The state mutation a RENAME commit makes — metadata only:
+    schema field names, the name->id mapping, stats keys, and pending
+    delete entries' CURRENT-name aliases move; no data file, added_at,
+    per-file physical mapping or Bloom sidecar changes (sidecars key
+    their bitmaps by PHYSICAL column names, and probes translate
+    through the column-id mapping)."""
     from pyspark.sql.types import StructField, StructType
 
-    s = StructType.fromJson(json.loads(schema_json))
-    out = StructType(
-        [
-            StructField(renames.get(f.name, f.name), f.dataType, True)
-            for f in s.fields
-        ]
+    s = StructType.fromJson(json.loads(state["schema"]))
+    out = dict(state)
+    out["schema"] = json.dumps(
+        StructType(
+            [
+                StructField(renames.get(f.name, f.name), f.dataType, True)
+                for f in s.fields
+            ]
+        ).jsonValue()
     )
-    return json.dumps(out.jsonValue())
-
-
-def _apply_rename(state_like: dict, renames: dict) -> dict:
-    """The state mutation a RENAME commit makes — metadata only:
-    schema field names, the name->id mapping, stats/bloom keys, and
-    pending delete entries' CURRENT-name aliases move; no data file,
-    added_at, or per-file physical mapping changes.  Shared by the
-    publish path and the delta replay so they cannot drift."""
-    out = dict(state_like)
-    out["schema"] = _rename_fields_json(state_like.get("schema"), renames)
     out["field_ids"] = {
-        renames.get(n, n): fid
-        for n, fid in state_like.get("field_ids", {}).items()
+        renames.get(n, n): fid for n, fid in state["field_ids"].items()
     }
     out["stats"] = {
-        f: (
-            {renames.get(c, c): b for c, b in s.items()}
-            if isinstance(s, dict)
-            else s
-        )
-        for f, s in state_like.get("stats", {}).items()
+        f: {renames.get(c, c): b for c, b in st.items()}
+        for f, st in state["stats"].items()
     }
-    if state_like.get("blooms"):
-        out["blooms"] = {
-            f: {renames.get(c, c): b for c, b in cols.items()}
-            for f, cols in state_like["blooms"].items()
-        }
-    new_dels = []
-    for e in state_like.get("deletes", []):
-        cur = list(e.get("as", e["cols"]))
-        e2 = dict(e)
-        e2["as"] = [renames.get(c, c) for c in cur]
-        new_dels.append(e2)
-    out["deletes"] = new_dels
+    out["deletes"] = [
+        {**e, "as": [renames.get(c, c) for c in e.get("as", e["cols"])]}
+        for e in state["deletes"]
+    ]
     return out
 
 
+def _commit_record(d: dict) -> dict:
+    """What one commit DID — a checkpoint's ``commit`` field — read
+    off its delta: the change feed walks these instead of set-diffing
+    endpoint snapshots."""
+    rec = {"kind": d["kind"], "added": list(d.get("added", []))}
+    for k in ("removed", "recorded", "renames"):
+        if k in d:
+            rec[k] = d[k]
+    return rec
+
+
 def _apply_delta(state: dict, m: dict) -> dict:
-    """Replay one delta manifest on top of a resolved state — the
-    read-side mirror of the `_publish` branches.  Rewrites never
-    appear here (they always publish full checkpoints)."""
+    """The ONE transition from a table state to the next: apply the
+    commit ``m["delta"]``, published as version ``m["version"]`` at
+    ``m["ts"]``.  ``_publish`` derives every new snapshot through it
+    and readers replay on-disk deltas through it, so the writer and
+    the reader cannot drift.  Delta kinds:
+
+    - ``append`` / ``upsert``: ``added`` files join the live set
+      (``upsert`` also adds its delete ``entries``);
+    - ``delete``: only ``entries`` — merge-on-read delete-key files;
+    - ``replace``: ``removed`` files leave, ``added`` files join;
+    - ``rewrite``: ``added`` files become the whole table and pending
+      deletes clear (they were materialized into the rewrite);
+    - ``rename``: ``renames`` move names only (``_apply_rename``).
+
+    Rewrites and renames always publish the resulting snapshot as a
+    checkpoint, so only the writer replays those two."""
     d = m["delta"]
     kind = d["kind"]
     v = int(m["version"])
-    files = list(state["files"])
-    added_at = dict(state.get("added_at", {}))
-    deletes = list(state.get("deletes", []))
-    stats = dict(state.get("stats", {}))
-    blooms = dict(state.get("blooms", {}))
-    bloom_refs = dict(state.get("bloom_refs", {}))
-    bloom_meta = d.get("bloom_meta", state.get("bloom_meta"))
-    field_ids = dict(state.get("field_ids", {}))
-    file_fields = dict(state.get("file_fields", {}))
-    schema = d.get("schema", state.get("schema"))
-    commit_meta: dict = {"kind": kind, "added": list(d.get("added", []))}
-    if kind == "append":
-        files = files + list(d["added"])
-        for f in d["added"]:
-            added_at[f] = v
-    elif kind == "replace":
-        removed = set(d["removed"])
-        files = [f for f in files if f not in removed] + list(d["added"])
-        added_at = {
-            f: a for f, a in added_at.items() if f not in removed
-        }
-        for f in d["added"]:
-            added_at[f] = v
-        commit_meta["removed"] = list(d["removed"])
-    elif kind == "delete":
-        deletes = deletes + list(d["entries"])
-        commit_meta["recorded"] = bool(d.get("recorded"))
-    elif kind == "upsert":
-        files = files + list(d["added"])
-        for f in d["added"]:
-            added_at[f] = v
-        deletes = deletes + list(d["entries"])
-        commit_meta["recorded"] = bool(d.get("recorded"))
-    else:
-        # rename commits always publish full checkpoints (they mutate
-        # the snapshot-wide metadata a delta cannot carry), so they
-        # never appear here
-        raise ValueError(f"unreplayable delta kind {kind!r} at v{v}")
+    added = list(d.get("added", []))
+    files = [] if kind == "rewrite" else list(state["files"])
+    if kind == "replace":
+        gone = set(d["removed"])
+        files = [f for f in files if f not in gone]
+    files += added
     live = set(files)
-    stats = {
-        f: s
-        for f, s in {**stats, **d.get("stats", {})}.items()
-        if f in live
-    }
-    blooms = {
-        f: b
-        for f, b in {**blooms, **d.get("blooms", {})}.items()
-        if f in live
-    }
-    bloom_refs = {
-        f: p
-        for f, p in {**bloom_refs, **d.get("bloom_refs", {})}.items()
-        if f in live
-    }
-    if d.get("file_fields"):
-        file_fields = {**file_fields, **d["file_fields"]}
-    if d.get("field_ids"):
-        field_ids = dict(d["field_ids"])
-    file_fields = {f: ff for f, ff in file_fields.items() if f in live}
+
+    def carry(key: str) -> dict:
+        merged = {**state.get(key, {}), **d.get(key, {})}
+        return {f: x for f, x in merged.items() if f in live}
+
     out = {
         "version": v,
         "files": files,
-        "added_at": added_at,
-        "deletes": deletes,
-        "stats": stats,
-        "schema": schema,
-        "run_ids": (state.get("run_ids", []) + [d["run_id"]])[
-            -RUN_ID_RETENTION:
-        ],
-        "commit": commit_meta,
+        # the evolved table schema (r14): explicit-schema reads
+        # reconcile old files against it — additive columns come back
+        # NULL where a file predates them
+        "schema": d["schema"],
+        "commit": _commit_record(d),
+        # per-file commit version — the "sequence number" the
+        # delete-visibility rule compares against
+        "added_at": {
+            f: a for f, a in state["added_at"].items() if f in live
+        } | {f: v for f in added},
+        "deletes": (
+            [] if kind == "rewrite" else list(state["deletes"])
+        ) + list(d.get("entries", [])),
+        # bounded idempotence ledger: a retry arriving after
+        # RUN_ID_RETENTION newer commits falls outside the window, the
+        # same retention contract real formats put on their txn app-ids
+        "run_ids": (state["run_ids"] + [d["run_id"]])[-RUN_ID_RETENTION:],
+        # zone-map stats only for live files: a rewrite/compaction
+        # drops the stale entries instead of accreting dead stats
+        "stats": carry("stats"),
+        # commit wall-time (r15): what read_table(as_of_ts=...)
+        # resolves against
+        "ts": m["ts"],
     }
-    if blooms or bloom_refs or bloom_meta:
-        if blooms:
-            out["blooms"] = blooms
+    bloom_meta = d.get("bloom_meta", state.get("bloom_meta"))
+    bloom_refs = carry("bloom_refs")
+    if bloom_refs or bloom_meta:
         out["bloom_refs"] = bloom_refs
         out["bloom_meta"] = bloom_meta
+    field_ids = d.get("field_ids") or state.get("field_ids")
     if field_ids:
-        out["field_ids"] = field_ids
-        out["file_fields"] = file_fields
-    if "ts" in m:
-        out["ts"] = m["ts"]
-    elif "ts" in state:
-        out["ts"] = state["ts"]
+        out["field_ids"] = dict(field_ids)
+        out["file_fields"] = carry("file_fields")
+    if kind == "rename":
+        out = _apply_rename(out, d["renames"])
     return out
 
 
@@ -597,8 +607,7 @@ def _resolve_state(
 ) -> dict:
     """The FULL table state at ``version``: walk back to the nearest
     checkpoint (a manifest carrying ``files``), then replay the delta
-    chain forward.  Bounded by CHECKPOINT_EVERY reads; legacy tables
-    (all-full manifests) resolve in one."""
+    chain forward.  Bounded by CHECKPOINT_EVERY reads."""
     chain: list[dict] = []
     v = version
     while True:
@@ -638,6 +647,15 @@ def _resolve_state(
     return state
 
 
+def _snapshot(
+    root: str, backend: CommitBackend | None = None
+) -> tuple[int, dict]:
+    """The newest version and its resolved state (``_EMPTY_STATE`` at
+    version 0)."""
+    v = current_version(root, backend)
+    return v, (_resolve_state(root, v, backend) if v else _EMPTY_STATE)
+
+
 def _stage(df: DataFrame, root: str) -> list[str]:
     """Write ``df`` under a fresh ``data/<uuid>/`` stage (invisible
     until a manifest names it) and return the staged parquet paths."""
@@ -657,14 +675,15 @@ def _collect_file_metadata(
     bloom_cols: list[str] | None,
     bloom_bits: int,
 ) -> tuple[dict, dict[str, str] | None]:
-    """One grouped aggregate over freshly staged files computing BOTH
-    zone-map min/max (``cols``) and bloom position sets
-    (``bloom_cols``); returns (stats, bloom_refs) in manifest format.
-    Bitmaps are written to a per-commit sidecar file in the stage
-    directory (see the bloom module notes) and only the path is
-    returned.  A real port reads all of this from the parquet footers
-    the writer already produced; this is the one-pass equivalent —
-    never O(files) driver-side jobs."""
+    """One grouped aggregate over freshly staged files computing
+    zone-map min/max (``cols``), and one computing bloom bitmaps
+    (``bloom_cols``, ``bloom_bits`` a multiple of 64); returns (stats,
+    bloom_refs) in manifest format.  Bitmaps are written to a
+    per-commit sidecar file in the stage directory (see the bloom
+    module notes) and only the path is returned.  A real port reads
+    all of this from the parquet footers the writer already produced;
+    this is the one-pass equivalent — never O(files) driver-side
+    jobs."""
     from pyspark.sql import functions as F
 
     by_abs = {os.path.abspath(f): f for f in new_files}
@@ -754,58 +773,38 @@ def _collect_file_metadata(
         # NULL keys yield NULL positions — dropped (they never probe
         # true)
         allpos = allpos.where(F.col("p").isNotNull())
-        if bloom_bits % 64 == 0:
-            # Packed-word fold (r15 opt, guide §1.2 step 2): OR each
-            # position's bit into a per-(file, col, 64-bit-word) long
-            # via bit_or — a plain HashAggregate that stays in
-            # whole-stage codegen end to end and partial-aggregates
-            # map-side, vs collect_set's ObjectHashAggregate.  The
-            # driver receives files x cols x (bits/64) longs instead
-            # of up-to-bits ints per group (~27x less py4j traffic at
-            # the 65536-bit gate sizing).  Bit placement mirrors
-            # _bloom_pack exactly: position p sets bit 63 - (p % 64)
-            # of word p // 64, so the word's 016x hex rendering IS
-            # digits 16w..16w+15 of the canonical packing.
-            wrows = (
-                allpos.groupBy(
-                    "__f", "__c", F.shiftright("p", 6).alias("w")
-                )
-                .agg(
-                    F.expr(
-                        "bit_or(shiftleft(CAST(1 AS BIGINT),"
-                        " 63 - pmod(p, 64)))"
-                    ).alias("bits")
-                )
-                .collect()
+        # Packed-word fold (r15 opt, guide §1.2 step 2): OR each
+        # position's bit into a per-(file, col, 64-bit-word) long via
+        # bit_or — a plain HashAggregate that stays in whole-stage
+        # codegen end to end and partial-aggregates map-side.  The
+        # driver receives files x cols x (bits/64) longs instead of
+        # up-to-bits ints per group.  Bit placement mirrors _bloom_pack
+        # exactly: position p sets bit 63 - (p % 64) of word p // 64,
+        # so the word's 016x hex rendering IS digits 16w..16w+15 of the
+        # canonical packing.
+        wrows = (
+            allpos.groupBy("__f", "__c", F.shiftright("p", 6).alias("w"))
+            .agg(
+                F.expr(
+                    "bit_or(shiftleft(CAST(1 AS BIGINT), 63 - pmod(p, 64)))"
+                ).alias("bits")
             )
-            acc: dict[tuple[str, int], dict[int, int]] = {}
-            for row in wrows:
-                acc.setdefault((row["__f"], row["__c"]), {})[row["w"]] = (
-                    row["bits"]
-                )
-            mask = (1 << 64) - 1
-            for (furi, ci), words in acc.items():
-                hexmap = "".join(
-                    format(words.get(w, 0) & mask, "016x")
-                    for w in range(bloom_bits // 64)
-                )
-                new_blooms.setdefault(_orig_path(furi), {})[
-                    bloom_cols[ci]
-                ] = hexmap
-        else:
-            # non-word-aligned sizing: the original bounded
-            # collect_set path (positions per group <= bloom_bits)
-            brows = (
-                allpos.groupBy("__f", "__c")
-                .agg(F.collect_set("p").alias("ps"))
-                .collect()
+            .collect()
+        )
+        acc: dict[tuple[str, int], dict[int, int]] = {}
+        for row in wrows:
+            acc.setdefault((row["__f"], row["__c"]), {})[row["w"]] = (
+                row["bits"]
             )
-            for row in brows:
-                orig = _orig_path(row["__f"])
-                c = bloom_cols[row["__c"]]
-                new_blooms.setdefault(orig, {})[c] = _bloom_pack(
-                    row["ps"], bloom_bits
-                )
+        mask = (1 << 64) - 1
+        for (furi, ci), words in acc.items():
+            hexmap = "".join(
+                format(words.get(w, 0) & mask, "016x")
+                for w in range(bloom_bits // 64)
+            )
+            new_blooms.setdefault(_orig_path(furi), {})[
+                bloom_cols[ci]
+            ] = hexmap
     new_bloom_refs: dict[str, str] | None = None
     if bloom_cols:
         # a staged file with zero rows (or all-NULL keys) gets an
@@ -833,57 +832,83 @@ def _commit(
     df: DataFrame,
     root: str,
     run_id: str,
-    files_fn,
-    stats_col: str | None = None,
-    expected_base: int | None = None,
+    kind: str,
+    *,
+    staged: list[str] | None = None,
+    key_cols: list[str] | None = None,
+    record_changes: bool = False,
+    replaced: list[str] | None = None,
     stats_cols: list[str] | None = None,
-    delete_cols: list[str] | None = None,
-    removed_files: list[str] | None = None,
-    replace_subset: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = BLOOM_BITS_DEFAULT,
+    expected_base: int | None = None,
     commit_ts: float | None = None,
 ) -> int:
-    """Shared commit protocol (stage -> idempotence check -> optimistic
-    exclusive-create retry loop); ``files_fn(cur_files, new_files)``
-    decides the published file list — append vs rewrite differ ONLY
-    there, so the race/retry/idempotence subtleties live in exactly
-    one place (r12 review #7).
+    """The Spark half every data commit shares: it stages files and
+    builds the commit's delta, and ``_publish`` commits it.
 
-    Zone-map stats: ``stats_cols`` records per-file [min, max] of
-    SEVERAL columns in ONE aggregate pass per file (manifest format
-    ``{file: {col: [mn, mx]}}``); ``stats_col`` is the legacy
-    single-column spelling, stored in the same multi-column format
-    since r14 (readers accept both shapes).
-
-    ``bloom_cols`` (r15): additionally record a per-file Bloom bitmap
-    (``bloom_bits`` bits, hex-packed) for each named column — the
-    point-lookup file-skipping sidecar ``read_table_pruned(eq=...)``
-    consults.  One distinct-aggregate pass over the staged files
-    computes every file's set positions (bounded by files x cols x m
-    rows); a production port reads the bitmaps from parquet footers."""
-    cols = list(stats_cols or ([] if stats_col is None else [stats_col]))
-    os.makedirs(_manifest_dir(root), exist_ok=True)
-    v = current_version(root)
-    prev = _resolve_state(root, v) if v else {"files": [], "run_ids": []}
-    if run_id in prev["run_ids"]:
+    In order: reject a ``bloom_bits`` the packed-word build cannot
+    lay out; return the current version if ``run_id`` already
+    committed (a retry stages nothing); fail a column type conflict
+    before staging (the merge re-runs authoritatively in ``_publish``
+    against whatever schema is current by then); with ``key_cols``,
+    stage ``df``'s distinct keys as delete-key files, plus — with
+    ``record_changes`` — the victim rows they hide at
+    ``expected_base`` (captured here if not given), so the change
+    feed can serve the retraction; unless ``kind`` is ``delete``,
+    stage ``df`` (or take the pre-staged ``staged`` files) as data
+    files with per-file zone maps (``stats_cols``) and Bloom sidecars
+    (``bloom_cols``)."""
+    if bloom_bits <= 0 or bloom_bits % 64:
+        raise ValueError(
+            f"bloom_bits={bloom_bits} is not a positive multiple of 64: "
+            "bitmaps are built and stored as whole 64-bit words"
+        )
+    v, cur = _snapshot(root)
+    if run_id in cur["run_ids"]:
         return v  # retry of a committed run: nothing to do
-    schema_json = df.schema.json()
-    if delete_cols is None and prev.get("schema"):
-        # fail BEFORE staging on a type conflict (the merge re-runs
-        # authoritatively inside the publish loop against whatever
-        # schema is current by then)
-        _merge_schema(prev["schema"], schema_json)
-    new_files = _stage(df, root)
-    new_stats, new_bloom_refs = _collect_file_metadata(
-        df.sparkSession, new_files, cols, bloom_cols, bloom_bits
-    )
+    if kind != "delete" and cur["schema"]:
+        _merge_schema(cur["schema"], df.schema.json())
+    delta: dict = {"kind": kind}
+    if key_cols is not None:
+        keys = df.select(*key_cols).distinct()
+        removed_files = None
+        if record_changes:
+            if expected_base is None:
+                expected_base = v
+            removed_files = []  # nothing visible: no victims to record
+            if expected_base and manifest_files(root, expected_base):
+                victims = read_table(
+                    df.sparkSession, root, version=expected_base
+                ).join(keys, list(key_cols), "left_semi")
+                removed_files = _stage(victims, root)
+        entries = [
+            {"path": p, "cols": list(key_cols)} for p in _stage(keys, root)
+        ]
+        if removed_files is not None and entries:
+            # the commit's CDF record (the victim rows) lives on ONE
+            # entry — all entries share the commit version, so
+            # per-entry duplication would double-count retractions
+            entries[0]["removed"] = removed_files
+        delta["entries"] = entries
+        delta["recorded"] = removed_files is not None
+    if kind != "delete":
+        files = _stage(df, root) if staged is None else staged
+        stats, bloom_refs = _collect_file_metadata(
+            df.sparkSession, files, list(stats_cols or []), bloom_cols,
+            bloom_bits,
+        )
+        delta.update(schema=df.schema.json(), added=files)
+        if stats:
+            delta["stats"] = stats
+        if bloom_refs:
+            delta["bloom_refs"] = bloom_refs
+        if bloom_cols:
+            delta["bloom_meta"] = {"m": bloom_bits, "k": BLOOM_K}
+    if replaced is not None:
+        delta["removed"] = list(replaced)
     return _publish(
-        root, run_id, new_files, new_stats, files_fn,
-        expected_base=expected_base, delete_cols=delete_cols,
-        removed_files=removed_files, replace_subset=replace_subset,
-        schema_json=schema_json, new_bloom_refs=new_bloom_refs,
-        bloom_bits=(bloom_bits if bloom_cols else None),
+        root, run_id, delta, expected_base=expected_base,
         commit_ts=commit_ts,
     )
 
@@ -891,163 +916,54 @@ def _commit(
 def _publish(
     root: str,
     run_id: str,
-    new_files: list[str],
-    new_stats: dict[str, list],
-    files_fn,
+    delta: dict,
+    *,
     expected_base: int | None = None,
     backend: CommitBackend | None = None,
-    delete_cols: list[str] | None = None,
-    removed_files: list[str] | None = None,
-    replace_subset: list[str] | None = None,
-    schema_json: str | None = None,
-    new_bloom_refs: dict[str, str] | None = None,
-    bloom_bits: int | None = None,
     commit_ts: float | None = None,
-    rename_map: dict[str, str] | None = None,
-    upsert_data_files: list[str] | None = None,
 ) -> int:
-    """The commit point, factored from ``_commit`` so the
-    optimistic-concurrency loop is testable under true multi-process
-    racing (VERDICT r12 ask #6) without a SparkSession: re-read newest
-    manifest -> idempotence check -> exclusive publish; a lost race
-    re-reads and retries at the next version.  Since r14 the storage
-    primitive is behind ``CommitBackend`` (local fs by default), and a
-    ``TransientPublishError`` (ack lost, outcome unknown) simply
-    re-enters the loop: the re-read's run_id check discovers whether
-    the lost publish actually landed — never a double commit."""
+    """The commit point, free of Spark so the optimistic-concurrency
+    loop is testable under true multi-process racing (VERDICT r12 ask
+    #6): re-read newest state -> idempotence check -> conflict checks
+    -> exclusive publish; a lost race re-reads and retries at the next
+    version.  ``delta`` describes the commit (see ``_apply_delta``;
+    ``schema`` is the commit's OWN schema, or absent).  Each attempt
+    fills in what depends on the state it lands on — the merged table
+    schema, column ids and per-file physical mappings, the delete
+    entries' sequence number, the clamped commit time — and derives
+    the next snapshot as ``_apply_delta(cur, delta)``.  Since r14 the
+    storage primitive is behind ``CommitBackend`` (local fs by
+    default), and a ``TransientPublishError`` (ack lost, outcome
+    unknown) simply re-enters the loop: the re-read's run_id check
+    discovers whether the lost publish actually landed — never a
+    double commit."""
     b = backend or _LOCAL_BACKEND
     while True:
-        v = current_version(root, backend=b)
-        cur = (
-            _resolve_state(root, v, backend=b)
-            if v
-            else {"files": [], "run_ids": []}
-        )
+        v, cur = _snapshot(root, b)
         if run_id in cur["run_ids"]:
             return v  # a racing retry of the same run won
+        kind = delta["kind"]
+        if kind == "rewrite" and not cur["files"]:
+            # nothing to rewrite: the commit is the table's first
+            # append, which change feeds can still serve
+            kind = "append"
         if (
             expected_base is not None
-            and replace_subset is None
+            and kind != "replace"
             and v != expected_base
         ):
             # REPLACE conflict detection: the table moved past the
-            # snapshot this rewrite was computed from — publishing
-            # would drop the interleaved commits' files.  The check
-            # re-runs on every retry, so losing the exclusive-create
-            # race to ANY commit (append or rewrite) surfaces here.
+            # snapshot this rewrite (or recorded delete) was computed
+            # from — publishing would drop the interleaved commits'
+            # files.  The check re-runs on every retry, so losing the
+            # exclusive-create race to ANY commit surfaces here.
             raise CommitConflictError(
                 f"table at v{v}, rewrite computed from v{expected_base}: "
                 "recompute from the current snapshot and retry"
             )
-        cur_added = cur.get("added_at", {})
-        cur_dels = cur.get("deletes", [])
-        schema = cur.get("schema")
-        field_ids = dict(cur.get("field_ids", {}))
-        file_fields = dict(cur.get("file_fields", {}))
-        commit_meta: dict = {"added": list(new_files)}
-        new_entries: list[dict] = []
-        if rename_map is not None:
-            # metadata-only RENAME commit (r15, VERDICT r14 ask #5):
-            # stable column IDs make a rename distinguishable from
-            # drop+add — the id keeps its identity, only the current
-            # NAME moves.  Old files resolve through their recorded
-            # physical-name->id mapping at read time; zero data bytes
-            # move (Iceberg's name-mapping rename).
-            if schema is None:
-                raise SchemaEvolutionError(
-                    "cannot rename columns of a legacy table without a "
-                    "recorded schema"
-                )
-            from pyspark.sql.types import StructType
-
-            names = [
-                f.name
-                for f in StructType.fromJson(json.loads(schema)).fields
-            ]
-            for old, new in rename_map.items():
-                if old not in names:
-                    raise SchemaEvolutionError(
-                        f"rename source {old!r} is not a table column "
-                        f"(have: {sorted(names)})"
-                    )
-                if new in names and new not in rename_map:
-                    raise SchemaEvolutionError(
-                        f"rename target {new!r} already exists"
-                    )
-            if len(set(rename_map.values())) != len(rename_map):
-                raise SchemaEvolutionError(
-                    "two columns renamed to the same target"
-                )
-            if not field_ids:
-                # bootstrap: assign ids in schema order; every live
-                # file was written under the current names, so its
-                # physical mapping is the identity
-                field_ids = {n: i + 1 for i, n in enumerate(names)}
-                file_fields = {
-                    f: dict(field_ids) for f in cur["files"]
-                }
-            renamed = _apply_rename(
-                {
-                    "schema": schema,
-                    "field_ids": field_ids,
-                    "stats": cur.get("stats", {}),
-                    "blooms": cur.get("blooms", {}),
-                    "deletes": cur_dels,
-                },
-                rename_map,
-            )
-            # bloom_refs are rename-invariant: sidecar files key their
-            # bitmaps by PHYSICAL column names and probes translate
-            # through the column-id mapping (legacy inline "blooms"
-            # still rename their keys above)
-            commit_meta["kind"] = "rename"
-            commit_meta["renames"] = dict(rename_map)
-            files = list(cur["files"])
-            added_at = dict(cur_added)
-            deletes = renamed["deletes"]
-            schema = renamed["schema"]
-            field_ids = renamed["field_ids"]
-            rename_stats = renamed["stats"]
-            rename_blooms = renamed.get("blooms", {})
-        elif delete_cols is not None:
-            # merge-on-read DELETE commit: the data-file list is
-            # untouched; the staged files are DELETE-KEY files that
-            # apply (at read time) to every data file committed at an
-            # EARLIER version — Iceberg's equality-delete sequence
-            # rule, so a later re-insert of a deleted key survives.
-            #
-            # UPSERT (r15): the same commit may ALSO add data files —
-            # MERGE as one atomic version.  The delete entries and the
-            # new files share this commit's sequence number, and the
-            # rule's strict inequality (delete.at > file.added_at)
-            # means the delete hides matching rows only in OLDER
-            # files while this commit's own rows survive — exactly
-            # upsert semantics, with zero new read-path machinery.
-            is_upsert = bool(upsert_data_files)
-            commit_meta["kind"] = "upsert" if is_upsert else "delete"
-            commit_meta["recorded"] = removed_files is not None
-            commit_meta["added"] = list(upsert_data_files or [])
-            files = list(cur["files"]) + list(upsert_data_files or [])
-            new_entries = [
-                {"path": p, "cols": list(delete_cols), "at": v + 1}
-                for p in new_files
-            ]  # noqa: the delta payload below reuses these entries
-            if removed_files is not None and new_entries:
-                # the commit's CDF record (the victim rows) lives on
-                # ONE entry — all entries share the commit version, so
-                # per-entry duplication would double-count retractions
-                new_entries[0]["removed"] = list(removed_files)
-            deletes = cur_dels + new_entries
-            added_at = dict(cur_added)
-            for f in upsert_data_files or []:
-                added_at[f] = v + 1
-        elif replace_subset is not None:
-            commit_meta["kind"] = "replace"
-            commit_meta["removed"] = list(replace_subset)
-            # PARTIAL compaction (replace-files commit): swap ONLY the
-            # named files for the staged ones.  Interleaved APPENDS do
-            # not conflict — they touch disjoint files — which is the
-            # whole point vs a full rewrite.  Two things DO conflict:
+        if kind == "replace":
+            # PARTIAL compaction swaps ONLY the named files, so
+            # interleaved APPENDS do not conflict.  Two things DO:
             # (a) a replaced file no longer live (another rewrite or
             # compaction got it first); (b) a DELETE landing since the
             # compaction's base — the compactor applied the base's
@@ -1055,122 +971,101 @@ def _publish(
             # would apply to the old files (low added_at) but not to
             # the rewritten ones (added_at = this version), letting
             # the rewritten rows escape it.
-            gone = set(replace_subset) - set(cur["files"])
+            gone = set(delta["removed"]) - set(cur["files"])
             if gone:
                 raise CommitConflictError(
                     f"{len(gone)} replaced file(s) no longer live at "
                     f"v{v}: another rewrite won; re-plan the compaction"
                 )
             if expected_base is not None:
-                base_m = (
-                    _resolve_state(root, expected_base, backend=b)
+                base_dels = (
+                    _resolve_state(root, expected_base, backend=b)["deletes"]
                     if expected_base
-                    else {"deletes": []}
+                    else []
                 )
-                base_dels = {d["path"] for d in base_m.get("deletes", [])}
-                cur_del_paths = {d["path"] for d in cur_dels}
-                if base_dels != cur_del_paths:
+                if {d["path"] for d in base_dels} != {
+                    d["path"] for d in cur["deletes"]
+                }:
                     raise CommitConflictError(
                         f"delete commit landed since v{expected_base}: "
                         "the rewritten files would escape it; re-read "
                         "and re-plan the compaction"
                     )
-            drop = set(replace_subset)
-            files = [f for f in cur["files"] if f not in drop] + new_files
-            deletes = cur_dels  # still apply to the untouched files
-            new_set = set(new_files)
-            added_at = {
-                f: (cur_added.get(f, 0) if f not in new_set else v + 1)
-                for f in files
-            }
-        else:
-            files = files_fn(cur["files"], new_files)
-            kept_old = set(cur["files"]) & set(files)
-            # a REWRITE names only new files: its df is the full
-            # logical content (deletes already applied by the
-            # read_table the caller rewrote from), so pending delete
-            # files are MATERIALIZED and drop out of the snapshot;
-            # an APPEND keeps every old file and carries them.
-            # Distinguish by whether every old file survives, with
-            # the empty-table edge resolved conservatively: no old
-            # files -> nothing a delete could still apply to.
-            is_append = kept_old == set(cur["files"]) and cur["files"]
-            commit_meta["kind"] = "append" if is_append or not cur["files"] else "rewrite"
-            deletes = cur_dels if is_append else []
-            added_at = {
-                f: (cur_added.get(f, 0) if f in kept_old else v + 1)
-                for f in files
-            }
-            if schema_json is not None and commit_meta["kind"] == "rewrite":
-                # a rewrite REDEFINES the table (the only way to drop
-                # a column or change a type)
-                schema = _merge_schema(None, schema_json)
-        if schema_json is not None and (
-            replace_subset is not None
-            or commit_meta.get("kind") in ("append", "upsert")
-        ):
-            schema = _merge_schema(schema, schema_json)
-        kind = commit_meta["kind"]
+        schema = cur["schema"]
+        if delta.get("schema") is not None and kind not in ("delete", "rename"):
+            # appends evolve the table schema; a rewrite REDEFINES it
+            # (the only way to drop a column or change a type)
+            base_schema = None if kind == "rewrite" else schema
+            schema = _merge_schema(base_schema, delta["schema"])
+        d = {**delta, "kind": kind, "run_id": run_id, "schema": schema}
+        if "entries" in delta:
+            # merge-on-read deletes apply (at read time) to data files
+            # committed at an EARLIER version — Iceberg's equality-delete
+            # sequence rule, so a later re-insert of a deleted key
+            # survives, and an upsert's own rows (same version) survive
+            d["entries"] = [{**e, "at": v + 1} for e in delta["entries"]]
         # ---- stable column IDs (r15) -------------------------------
-        # Tables acquire a name->id mapping the first time they RENAME
-        # (bootstrap above); from then on every data commit assigns
-        # fresh ids to genuinely-new column names and records each new
-        # file's physical-name->id mapping, so a rename stays
-        # distinguishable from drop+add forever after.
-        if field_ids and kind != "rename":
-            if kind == "rewrite":
-                # a rewrite redefines the table: surviving names keep
-                # their identity, vanished names' ids retire
-                from pyspark.sql.types import StructType
-
-                new_names = [
-                    f.name
-                    for f in StructType.fromJson(json.loads(schema)).fields
-                ]
-                nxt = max(field_ids.values(), default=0)
-                kept = {}
-                for n in new_names:
-                    if n in field_ids:
-                        kept[n] = field_ids[n]
-                    else:
-                        nxt += 1
-                        kept[n] = nxt
-                field_ids = kept
-            elif schema is not None:
-                from pyspark.sql.types import StructType
-
-                nxt = max(field_ids.values(), default=0)
-                for f0 in StructType.fromJson(json.loads(schema)).fields:
-                    if f0.name not in field_ids:
-                        nxt += 1
-                        field_ids[f0.name] = nxt
-            ff_targets = (
-                upsert_data_files if delete_cols is not None else new_files
-            )
-            if ff_targets and schema_json is not None:
-                from pyspark.sql.types import StructType
-
-                staged_names = [
-                    f.name
-                    for f in StructType.fromJson(
-                        json.loads(schema_json)
-                    ).fields
-                ]
-                phys = {n: field_ids[n] for n in staged_names}
-                for f in ff_targets:
-                    file_fields[f] = dict(phys)
-        # ---- bloom sidecar metadata (r15) --------------------------
-        cur_bm = cur.get("bloom_meta")
-        if bloom_bits is not None:
-            if cur_bm and int(cur_bm["m"]) != int(bloom_bits):
-                raise ValueError(
-                    f"bloom_bits={bloom_bits} conflicts with the table's "
-                    f"established m={cur_bm['m']} — all commits of one "
-                    "table must agree so probes test one bitmap geometry"
+        # A rename makes a column's identity distinguishable from
+        # drop+add: the id stays, only the current NAME moves, and old
+        # files resolve through their recorded physical-name->id
+        # mapping at read time — zero data bytes move (Iceberg's
+        # name-mapping rename).  From a table's first rename on, every
+        # data commit assigns fresh ids to genuinely-new column names
+        # and records each new file's physical-name->id mapping.
+        field_ids = cur.get("field_ids", {})
+        if kind == "rename":
+            renames = delta["renames"]
+            if schema is None:
+                raise SchemaEvolutionError(
+                    "cannot rename columns of a table without a "
+                    "recorded schema"
                 )
-            bloom_meta = {"m": int(bloom_bits), "k": BLOOM_K}
-        else:
-            bloom_meta = cur_bm
+            names = _field_names(schema)
+            for old, new in renames.items():
+                if old not in names:
+                    raise SchemaEvolutionError(
+                        f"rename source {old!r} is not a table column "
+                        f"(have: {sorted(names)})"
+                    )
+                if new in names and new not in renames:
+                    raise SchemaEvolutionError(
+                        f"rename target {new!r} already exists"
+                    )
+            if len(set(renames.values())) != len(renames):
+                raise SchemaEvolutionError(
+                    "two columns renamed to the same target"
+                )
+            if not field_ids:
+                # bootstrap: ids in schema order; every live file was
+                # written under the current names, so its physical
+                # mapping is the identity
+                d["field_ids"] = {n: i + 1 for i, n in enumerate(names)}
+                d["file_fields"] = {
+                    f: dict(d["field_ids"]) for f in cur["files"]
+                }
+        elif field_ids and kind != "delete":
+            # a rewrite redefines the table: surviving names keep their
+            # identity, vanished names' ids retire
+            nxt = max(field_ids.values())
+            ids = {} if kind == "rewrite" else dict(field_ids)
+            for n in _field_names(schema):
+                if n not in field_ids:
+                    nxt += 1
+                ids[n] = field_ids.get(n, nxt)
+            d["field_ids"] = ids
+            d["file_fields"] = {}
+            if delta.get("schema") is not None:
+                phys = {n: ids[n] for n in _field_names(delta["schema"])}
+                d["file_fields"] = {f: dict(phys) for f in d["added"]}
+        # ---- bloom sidecar geometry (r15) --------------------------
+        cur_bm = cur.get("bloom_meta")
+        new_bm = delta.get("bloom_meta")
+        if new_bm and cur_bm and int(cur_bm["m"]) != new_bm["m"]:
+            raise ValueError(
+                f"bloom_bits={new_bm['m']} conflicts with the table's "
+                f"established m={cur_bm['m']} — all commits of one "
+                "table must agree so probes test one bitmap geometry"
+            )
         # ---- commit wall-time (r15, timestamp time travel) ---------
         # Monotonic non-decreasing: a commit stamped behind its
         # predecessor (clock skew between writers) clamps forward so
@@ -1183,123 +1078,19 @@ def _publish(
             ts = _t.time()
         else:
             ts = float(commit_ts)
-        ts = max(ts, float(cur.get("ts", 0.0)))
-        live = set(files)
-        if rename_map is not None:
-            stats_out = rename_stats
-            blooms_out = rename_blooms  # legacy inline only
-            bloom_refs_out = {
-                f: p
-                for f, p in cur.get("bloom_refs", {}).items()
-                if f in live
-            }
-        else:
-            stats_out = {
-                f: s
-                for f, s in {**cur.get("stats", {}), **new_stats}.items()
-                if f in live
-            }
-            blooms_out = {
-                f: bl
-                for f, bl in cur.get("blooms", {}).items()
-                if f in live
-            }  # legacy inline carried through, never grown
-            bloom_refs_out = {
-                f: p
-                for f, p in {
-                    **cur.get("bloom_refs", {}),
-                    **(new_bloom_refs or {}),
-                }.items()
-                if f in live
-            }
-        manifest = {
-            "version": v + 1,
-            "files": files,
-            # the evolved table schema (r14): explicit-schema reads
-            # reconcile old files against it — additive columns come
-            # back NULL where a file predates them.  Absent on legacy
-            # manifests and carried unchanged through delete commits.
-            "schema": schema,
-            # per-commit record (r14): what THIS commit did — lets the
-            # change feed walk the log instead of set-diffing endpoint
-            # snapshots, so content-preserving replace commits are
-            # skipped rather than poisoning the range.
-            "commit": commit_meta,
-            # per-file commit version — the "sequence number" the
-            # delete-visibility rule compares against.  Legacy
-            # manifests lack it; readers default missing entries to 0
-            # (every delete applies — conservative, and exact for
-            # pre-delete-feature tables, which have no deletes).
-            "added_at": added_at,
-            "deletes": deletes,
-            # bounded idempotence ledger: keep only the newest
-            # RUN_ID_RETENTION entries (r12 ADVICE — unbounded, every
-            # commit rewrote the full history).  A retry arriving
-            # after that many subsequent commits falls outside the
-            # idempotence window, the same retention contract real
-            # formats put on their txn app-ids.
-            "run_ids": (cur["run_ids"] + [run_id])[-RUN_ID_RETENTION:],
-            # zone-map stats only for files this snapshot still
-            # references: a rewrite/compaction drops the stale
-            # entries instead of accreting O(history) dead stats
-            # (r12 ADVICE)
-            "stats": stats_out,
-            # commit wall-time (r15): what read_table(as_of_ts=...)
-            # resolves against
-            "ts": ts,
-        }
-        if blooms_out or bloom_refs_out or bloom_meta:
-            if blooms_out:
-                manifest["blooms"] = blooms_out  # legacy inline
-            manifest["bloom_refs"] = bloom_refs_out
-            manifest["bloom_meta"] = bloom_meta
-        if field_ids:
-            manifest["field_ids"] = field_ids
-            manifest["file_fields"] = {
-                f: ff for f, ff in file_fields.items() if f in live
-            }
+        m = {"version": v + 1, "delta": d, "ts": max(ts, cur["ts"])}
         # Checkpoint-or-delta (r14): v1, every CHECKPOINT_EVERY-th
         # version, every rewrite, and every RENAME (r15 — it mutates
-        # snapshot-wide metadata a delta cannot carry) publish the
-        # FULL state; other commits publish only their delta — O(this
-        # commit) bytes, not O(live files).  Readers replay from the
-        # nearest checkpoint (_resolve_state).  The commit POINT is
-        # identical either way.
+        # snapshot-wide metadata) publish the FULL state; other
+        # commits publish only their delta — O(this commit) bytes, not
+        # O(live files).  Readers replay from the nearest checkpoint
+        # (_resolve_state).  The commit POINT is identical either way.
         is_checkpoint = (
             v == 0
             or (v + 1) % CHECKPOINT_EVERY == 0
             or kind in ("rewrite", "rename")
         )
-        if is_checkpoint:
-            payload_obj: dict = manifest
-        else:
-            delta: dict = {"kind": kind, "run_id": run_id, "schema": schema}
-            if kind in ("append", "replace", "upsert"):
-                data_files = (
-                    list(upsert_data_files or [])
-                    if kind == "upsert"
-                    else list(new_files)
-                )
-                delta["added"] = data_files
-                if new_stats:
-                    delta["stats"] = new_stats
-                if new_bloom_refs:
-                    delta["bloom_refs"] = new_bloom_refs
-                if bloom_bits is not None:
-                    delta["bloom_meta"] = bloom_meta
-                if field_ids:
-                    delta["field_ids"] = field_ids
-                    delta["file_fields"] = {
-                        f: file_fields[f]
-                        for f in data_files
-                        if f in file_fields
-                    }
-            if kind == "replace":
-                delta["removed"] = list(replace_subset)
-            if kind in ("delete", "upsert"):
-                delta["entries"] = new_entries
-                delta["recorded"] = removed_files is not None
-            payload_obj = {"version": v + 1, "delta": delta, "ts": ts}
+        payload = _apply_delta(cur, m) if is_checkpoint else m
         # The backend's publish-if-absent is the commit point: it
         # fails atomically if the version exists, and a manifest is
         # never visible with partial content (LocalFSBackend: temp
@@ -1308,7 +1099,7 @@ def _publish(
         # code).  A lost ack re-enters the loop, where the run_id
         # check resolves whether the publish landed.
         try:
-            if b.publish(root, v + 1, json.dumps(payload_obj)):
+            if b.publish(root, v + 1, json.dumps(payload)):
                 return v + 1
         except TransientPublishError:
             pass  # outcome unknown: the re-read at loop top resolves it
@@ -1319,7 +1110,6 @@ def commit_append(
     df: DataFrame,
     root: str,
     run_id: str,
-    stats_col: str | None = None,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = BLOOM_BITS_DEFAULT,
@@ -1329,29 +1119,29 @@ def commit_append(
     including it; returns the committed version.  Re-committing an
     already-committed ``run_id`` is a no-op (idempotent retry).
 
-    With ``stats_col`` (one column) or ``stats_cols`` (several — r14,
-    VERDICT r13 ask #8) set, the commit records each new file's
-    [min, max] per column in the manifest — the zone map that lets
-    ``read_table_pruned`` skip whole files on range predicates.  A
-    PARTITION column is the degenerate case: per-file min == max, so
-    partition-value pruning and sort-column pruning are one mechanism
-    (exactly how Iceberg/Delta file stats subsume hive-style partition
-    pruning).  Stats come from one per-file aggregate pass here
-    (bounded: files per commit x columns); a production port reads
-    them from the parquet footers the writer already wrote.
+    With ``stats_cols`` set (r14, VERDICT r13 ask #8), the commit
+    records each new file's [min, max] per column in the manifest —
+    the zone map that lets ``read_table_pruned`` skip whole files on
+    range predicates.  A PARTITION column is the degenerate case:
+    per-file min == max, so partition-value pruning and sort-column
+    pruning are one mechanism (exactly how Iceberg/Delta file stats
+    subsume hive-style partition pruning).  Stats come from one
+    per-file aggregate pass here (bounded: files per commit x
+    columns); a production port reads them from the parquet footers
+    the writer already wrote.
 
     ``bloom_cols`` (r15, VERDICT r14 ask #1): record a per-file Bloom
-    bitmap for each named column — what zone maps cannot do: prune a
-    ``key = k`` point lookup on a high-cardinality UNSORTED column
-    down to the files that might contain the key.  ``commit_ts``
-    pins the commit wall-time for ``read_table(as_of_ts=...)``
-    (defaults to the real clock, clamped monotonic)."""
+    bitmap of ``bloom_bits`` bits (a positive multiple of 64) for each
+    named column — what zone maps cannot do: prune a ``key = k`` point
+    lookup on a high-cardinality UNSORTED column down to the files
+    that might contain the key.  ``commit_ts`` pins the commit
+    wall-time for ``read_table(as_of_ts=...)`` (defaults to the real
+    clock, clamped monotonic)."""
     return _commit(
         df,
         root,
         run_id,
-        lambda cur, new: cur + new,
-        stats_col=stats_col,
+        "append",
         stats_cols=stats_cols,
         bloom_cols=bloom_cols,
         bloom_bits=bloom_bits,
@@ -1364,7 +1154,6 @@ def commit_add_files(
     files: list[str],
     root: str,
     run_id: str,
-    stats_col: str | None = None,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = BLOOM_BITS_DEFAULT,
@@ -1381,24 +1170,17 @@ def commit_add_files(
     — O(1) driver-side jobs per ingest instead of O(files).  Stats /
     bloom sidecars are computed exactly as ``commit_append`` does;
     same idempotence and optimistic-versioning rules."""
-    cols = list(stats_cols or ([] if stats_col is None else [stats_col]))
-    os.makedirs(_manifest_dir(root), exist_ok=True)
     files = sorted(files)
     # schema from the footers (driver-side read; no job runs)
-    schema_json = spark.read.parquet(*files).schema.json()
-    v = current_version(root)
-    prev = _resolve_state(root, v) if v else {"files": [], "run_ids": []}
-    if run_id in prev["run_ids"]:
-        return v
-    if prev.get("schema"):
-        _merge_schema(prev["schema"], schema_json)
-    new_stats, new_bloom_refs = _collect_file_metadata(
-        spark, files, cols, bloom_cols, bloom_bits
-    )
-    return _publish(
-        root, run_id, files, new_stats, lambda cur, new: cur + new,
-        schema_json=schema_json, new_bloom_refs=new_bloom_refs,
-        bloom_bits=(bloom_bits if bloom_cols else None),
+    return _commit(
+        spark.read.parquet(*files),
+        root,
+        run_id,
+        "append",
+        staged=files,
+        stats_cols=stats_cols,
+        bloom_cols=bloom_cols,
+        bloom_bits=bloom_bits,
         commit_ts=commit_ts,
     )
 
@@ -1440,7 +1222,7 @@ def commit_rewrite(
         df,
         root,
         run_id,
-        lambda cur, new: new,
+        "rewrite",
         expected_base=expected_base,
         commit_ts=commit_ts,
     )
@@ -1500,26 +1282,13 @@ def commit_delete(
                     f"{table_types[c].simpleString()}, keys frame has "
                     f"{key_types[c].simpleString()}"
                 )
-    keys = keys_df.select(*key_cols).distinct()
-    removed_files: list[str] | None = None
-    if record_changes:
-        spark = keys_df.sparkSession
-        if expected_base is None:
-            expected_base = current_version(root)
-        if expected_base and manifest_files(root, expected_base):
-            victims = read_table(spark, root, version=expected_base).join(
-                keys, list(key_cols), "left_semi"
-            )
-            removed_files = _stage(victims, root)
-        else:
-            removed_files = []  # nothing visible: no victims to record
     return _commit(
-        keys,
+        keys_df,
         root,
         run_id,
-        lambda cur, new: cur,  # data files untouched
-        delete_cols=list(key_cols),
-        removed_files=removed_files,
+        "delete",
+        key_cols=list(key_cols),
+        record_changes=record_changes,
         expected_base=expected_base,
     )
 
@@ -1567,7 +1336,6 @@ def commit_upsert(
     ``commit_delete``, an insert-only one is ``commit_append``."""
     if not key_cols:
         raise ValueError("key_cols must name at least one column")
-    spark = df.sparkSession
     ts = table_schema(root)
     if ts is not None:
         table_types = {f.name: f.dataType for f in ts.fields}
@@ -1581,44 +1349,18 @@ def commit_upsert(
                     f"{table_types[c].simpleString()}, df has "
                     f"{df_types[c].simpleString()}"
                 )
-        # fail BEFORE staging on any non-key type conflict too (the
-        # merge re-runs authoritatively inside the publish loop)
-        _merge_schema(ts.json(), df.schema.json())
-    v0 = current_version(root)
-    prev = _resolve_state(root, v0) if v0 else {"files": [], "run_ids": []}
-    if run_id in prev["run_ids"]:
-        return v0  # retry of a committed run: nothing staged twice
-    keys = df.select(*key_cols).distinct()
-    removed_files: list[str] | None = None
-    if record_changes:
-        if expected_base is None:
-            expected_base = v0
-        if expected_base and manifest_files(root, expected_base):
-            victims = read_table(spark, root, version=expected_base).join(
-                keys, list(key_cols), "left_semi"
-            )
-            removed_files = _stage(victims, root)
-        else:
-            removed_files = []  # nothing visible: no victims to record
-    data_files = _stage(df, root)
-    key_files = _stage(keys, root)
-    new_stats, new_bloom_refs = _collect_file_metadata(
-        spark, data_files, list(stats_cols or []), bloom_cols, bloom_bits
-    )
-    return _publish(
+    return _commit(
+        df,
         root,
         run_id,
-        key_files,
-        new_stats,
-        lambda cur, new: cur,  # unused: the delete/upsert branch builds files
+        "upsert",
+        key_cols=list(key_cols),
+        record_changes=record_changes,
+        stats_cols=stats_cols,
+        bloom_cols=bloom_cols,
+        bloom_bits=bloom_bits,
         expected_base=expected_base,
-        delete_cols=list(key_cols),
-        removed_files=removed_files,
-        schema_json=df.schema.json(),
-        new_bloom_refs=new_bloom_refs,
-        bloom_bits=(bloom_bits if bloom_cols else None),
         commit_ts=commit_ts,
-        upsert_data_files=data_files,
     )
 
 
@@ -1628,7 +1370,6 @@ def commit_replace_files(
     run_id: str,
     replaced: list[str],
     expected_base: int,
-    stats_col: str | None = None,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = BLOOM_BITS_DEFAULT,
@@ -1651,13 +1392,12 @@ def commit_replace_files(
         df,
         root,
         run_id,
-        lambda cur, new: cur,  # unused: replace_subset branch builds files
-        stats_col=stats_col,
+        "replace",
+        replaced=replaced,
         stats_cols=stats_cols,
         bloom_cols=bloom_cols,
         bloom_bits=bloom_bits,
         expected_base=expected_base,
-        replace_subset=list(replaced),
         commit_ts=commit_ts,
     )
 
@@ -1692,11 +1432,8 @@ def commit_rename(
     return _publish(
         root,
         run_id,
-        [],
-        {},
-        lambda cur, new: cur,
+        {"kind": "rename", "renames": dict(renames)},
         backend=backend,
-        rename_map=dict(renames),
         commit_ts=commit_ts,
     )
 
@@ -1713,11 +1450,7 @@ def resolve_as_of(
     - ``ValueError`` if ``as_of_ts`` predates the oldest RETAINED
       commit — either the table didn't exist yet, or vacuum expired
       the manifests that would have answered (an expired as-of must
-      raise, never silently read newer — the retention contract).
-    - Manifests that predate timestamp recording (legacy) count as
-      ts=0.0: any non-negative as-of resolves to them rather than
-      erroring, matching the additive-evolution stance everywhere
-      else in this module."""
+      raise, never silently read newer — the retention contract)."""
     b = backend or _LOCAL_BACKEND
     newest = b.latest_version(root)
     if newest == 0:
@@ -1732,7 +1465,7 @@ def resolve_as_of(
                 f"(manifest v{v} vacuumed): the snapshot that would "
                 "answer it no longer exists"
             ) from None
-        if float(m.get("ts", 0.0)) <= as_of_ts:
+        if float(m["ts"]) <= as_of_ts:
             return v
         v -= 1
     raise ValueError(
@@ -1759,7 +1492,7 @@ def read_table_subset(
     missing = set(files) - set(m["files"])
     if missing:
         raise ValueError(f"{len(missing)} file(s) not live at v{v}")
-    if not m.get("deletes"):
+    if not m["deletes"]:
         return _read_files(spark, m, files)
     return _apply_deletes(spark, m, list(files))
 
@@ -1813,7 +1546,7 @@ def compact_small_files(
 
 def table_schema(root: str, version: int | None = None):
     """The snapshot's recorded (evolved) table schema as a StructType,
-    or None for legacy tables that predate schema tracking."""
+    or None for a table whose commits recorded none."""
     v = current_version(root) if version is None else version
     if v == 0:
         return None
@@ -1835,13 +1568,13 @@ def manifest_delete_files(root: str, version: int | None = None) -> list[dict]:
     v = current_version(root) if version is None else version
     if v == 0:
         return []
-    return list(_resolve_state(root, v).get("deletes", []))
+    return list(_resolve_state(root, v)["deletes"])
 
 
 def _read_files(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
     """Read data files under the manifest's recorded schema (files
-    predating an added column return NULL for it); legacy manifests
-    fall back to parquet self-description.
+    predating an added column return NULL for it); a table without a
+    recorded schema falls back to parquet self-description.
 
     Column-ID resolution (r15): on a table with ``field_ids``, each
     file's physical column names resolve to the CURRENT names through
@@ -1936,10 +1669,10 @@ def _apply_deletes(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
             "table columns collide with the delete-protocol markers "
             "__added_at/__del_at"
         )
-    added = m.get("added_at", {})
+    added = m["added_at"]
     by_v: dict[int, list[str]] = defaultdict(list)
     for f in files:
-        by_v[int(added.get(f, 0))].append(f)
+        by_v[int(added[f])].append(f)
     parts = [
         _read_files(spark, m, fs).withColumn(
             "__added_at", F.lit(v).cast("long")
@@ -1948,7 +1681,7 @@ def _apply_deletes(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
     ]
     data = reduce(DataFrame.unionByName, parts)
     by_cols: dict[tuple, list[dict]] = defaultdict(list)
-    for d in m.get("deletes", []):
+    for d in m["deletes"]:
         # "as" (r15): the CURRENT names of the key columns after any
         # renames — the delete file's physical columns keep the names
         # current when it was committed ("cols"), and the anti-join
@@ -2009,7 +1742,7 @@ def read_table(
         raise FileNotFoundError(
             f"snapshot v{v} of {root} names no data files"
         )
-    if not (apply_deletes and m.get("deletes")):
+    if not (apply_deletes and m["deletes"]):
         return _read_files(spark, m, files)
     return _apply_deletes(spark, m, files)
 
@@ -2071,21 +1804,7 @@ def read_table_pruned(
     if v == 0:
         raise FileNotFoundError(f"no committed version under {root}")
     m = _resolve_state(root, v)
-    stats = m.get("stats", {})
-
-    def col_bounds(f: str, c: str):
-        """[mn, mx] for column ``c`` of file ``f``; None = no info.
-        Accepts both the r14 ``{col: [mn, mx]}`` format and the legacy
-        single-column ``[mn, mx]`` list (which carried no column name
-        — it applies to whatever single column the table recorded)."""
-        s = stats.get(f)
-        if s is None:
-            return None
-        if isinstance(s, dict):
-            return s.get(c)
-        return s  # legacy single-column list
-
-    blooms = m.get("blooms", {})  # legacy inline format
+    stats = m["stats"]
     bloom_refs = m.get("bloom_refs", {})
     bloom_m = int((m.get("bloom_meta") or {}).get("m", 0) or 0)
     field_ids = m.get("field_ids", {})
@@ -2099,9 +1818,6 @@ def read_table_pruned(
         column-id mapping, so renames never touch sidecars.  Sidecars
         load lazily, one parse per distinct sidecar per call (bounded
         by commits with bloom_cols, not files)."""
-        inline = blooms.get(f, {}).get(c)
-        if inline is not None:
-            return inline
         path = bloom_refs.get(f)
         if path is None:
             return None
@@ -2123,7 +1839,7 @@ def read_table_pruned(
 
     def intersects(f: str) -> bool:
         for c, (c_lo, c_hi) in predicates.items():
-            b = col_bounds(f, c)
+            b = stats.get(f, {}).get(c)
             if b is None:
                 continue  # no zone info for this column: can't skip on it
             mn, mx = b
@@ -2152,7 +1868,7 @@ def read_table_pruned(
         # empty selection: preserve schema via a zero-row read of one file
         empty = _read_files(spark, m, [m["files"][0]]).limit(0)
         return empty, len(m["files"]), 0
-    if m.get("deletes"):
+    if m["deletes"]:
         # zone maps prune FILES; pending equality deletes remove ROWS
         # — applying the anti-join to the pruned subset is exact
         # (pruning never changes which rows a delete matches).
@@ -2160,18 +1876,16 @@ def read_table_pruned(
     return _read_files(spark, m, keep), len(m["files"]), len(keep)
 
 
-def _walk_commits(
-    root: str, from_version: int, to_version: int
-) -> list[dict] | None:
+def _walk_commits(root: str, from_version: int, to_version: int) -> list[dict]:
     """The per-commit records for versions (from, to] — what each
-    commit DID, read from the ``commit`` field manifests have carried
-    since r14.  Returns None if any manifest in the range predates the
-    field (legacy tables: callers fall back to endpoint set-diff);
-    raises if one has been vacuumed away (the range is unrecoverable —
-    resume from a snapshot).  Like ``vacuum``, this walks the local
-    manifest store directly (LocalFSBackend-only — see vacuum's
-    backend-scope note); change feeds over a non-local backend go
-    through ``_resolve_state(..., backend=...)`` snapshots."""
+    commit DID (``_commit_record``) with its version as ``at`` and the
+    delete entries in view: a delta's own entries, a checkpoint's
+    whole pending set.  Raises if a manifest in the range has been
+    vacuumed away (the range is unrecoverable — resume from a
+    snapshot).  Like ``vacuum``, this walks the local manifest store
+    directly (LocalFSBackend-only — see vacuum's backend-scope note);
+    change feeds over a non-local backend go through
+    ``_resolve_state(..., backend=...)`` snapshots."""
     out: list[dict] = []
     for v in range(from_version + 1, to_version + 1):
         try:
@@ -2182,22 +1896,53 @@ def _walk_commits(
                 "is unrecoverable; resume from a snapshot"
             ) from None
         if "delta" in m:
-            d = m["delta"]
-            rec = {
-                "kind": d["kind"],
-                "added": list(d.get("added", [])),
-                "at": v,
-                "deletes": list(d.get("entries", [])),
-            }
-            if "recorded" in d:
-                rec["recorded"] = d["recorded"]
-            out.append(rec)
-            continue
-        c = m.get("commit")
-        if c is None:
-            return None
-        out.append({**c, "at": v, "deletes": m.get("deletes", [])})
+            rec = {**_commit_record(m["delta"]), "deletes": m["delta"].get("entries", [])}
+        else:
+            rec = {**m["commit"], "deletes": m["deletes"]}
+        out.append({**rec, "at": v})
     return out
+
+
+def _changed_files(
+    root: str, from_version: int, to_version: int, retractions: bool
+) -> tuple[list[str], list[str]]:
+    """(added, removed) change files of the range, walking the commit
+    log: append commits contribute their files; content-preserving
+    replace commits (partial compaction) and metadata-only renames
+    contribute nothing — they change layout, not rows (files added in
+    the range are read through the TO-version state, whose column-id
+    resolution surfaces them under the final names).  With
+    ``retractions``, delete/upsert commits contribute their recorded
+    victim files as ``removed`` and raise if they recorded none;
+    without, they raise like a rewrite: not representable as an
+    append delta."""
+    added: list[str] = []
+    removed: list[str] = []
+    for c in _walk_commits(root, from_version, to_version):
+        kind = c["kind"]
+        if kind in ("replace", "rename"):
+            continue
+        if retractions and kind in ("delete", "upsert"):
+            if not c.get("recorded"):
+                raise ValueError(
+                    f"{kind} commit at v{c['at']} did not record "
+                    "its changes; re-commit with record_changes=True "
+                    "or resume from a snapshot"
+                )
+            removed += [
+                p
+                for d in c["deletes"]
+                if int(d["at"]) == c["at"]
+                for p in d.get("removed", [])
+            ]
+        elif kind != "append":
+            raise ValueError(
+                f"{kind} commit at v{c['at']}: not representable as "
+                f"{'changes' if retractions else 'an append delta'}; "
+                "resume from a snapshot"
+            )
+        added += c["added"]
+    return sorted(added), sorted(removed)
 
 
 def _zero_rows(spark: SparkSession, root: str, to_version: int) -> DataFrame:
@@ -2220,59 +1965,11 @@ def read_changes(
     raises, because the delta is not representable as additions;
     resume from the post-commit snapshot, as Delta's change feed
     requires (deletes that recorded their victims are servable through
-    ``read_changes_cdf`` instead).  Legacy manifests without commit
-    records fall back to endpoint set-difference with the same
-    refusal rules."""
-    walked = _walk_commits(root, from_version, to_version)
-    if walked is None:  # legacy table: endpoint set-diff
-        mf = (
-            _resolve_state(root, from_version)
-            if from_version
-            else {"files": []}
-        )
-        mt = _resolve_state(root, to_version)
-        old, new = set(mf["files"]), set(mt["files"])
-        if old - new:
-            raise ValueError(
-                f"non-append commit between v{from_version} and "
-                f"v{to_version}: files removed; resume from a snapshot"
-            )
-        if {d["path"] for d in mf.get("deletes", [])} != {
-            d["path"] for d in mt.get("deletes", [])
-        }:
-            raise ValueError(
-                f"delete commit between v{from_version} and "
-                f"v{to_version}: retractions are not an append delta; "
-                "resume from a snapshot"
-            )
-        added = sorted(new - old)
-        if not added:
-            return spark.read.parquet(*sorted(new)).limit(0)
-        return spark.read.parquet(*added)
-    added = []
-    for c in walked:
-        if c["kind"] == "append":
-            added += c["added"]
-        elif c["kind"] == "replace":
-            continue  # partial compaction: layout change, zero row delta
-        elif c["kind"] == "rename":
-            # metadata-only: zero row delta; files added in the range
-            # are read below through the TO-version state, whose
-            # column-id resolution surfaces them under the final names
-            continue
-        else:
-            # delete / upsert / rewrite: retractions are involved —
-            # not representable as pure appends (upserts with recorded
-            # victims are servable through read_changes_cdf)
-            raise ValueError(
-                f"{c['kind']} commit at v{c['at']}: not representable "
-                "as an append delta; resume from a snapshot"
-            )
+    ``read_changes_cdf`` instead)."""
+    added, _ = _changed_files(root, from_version, to_version, False)
     if not added:
         return _zero_rows(spark, root, to_version)
-    return _read_files(
-        spark, _resolve_state(root, to_version), sorted(added)
-    )
+    return _read_files(spark, _resolve_state(root, to_version), added)
 
 
 def read_changes_cdf(
@@ -2290,71 +1987,29 @@ def read_changes_cdf(
     changes — resume from a snapshot, as ``read_changes`` requires.
     Content-preserving replace commits (partial compaction) in the
     range contribute nothing, as they should."""
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
-    walked = _walk_commits(root, from_version, to_version)
-    if walked is None:
-        raise ValueError(
-            "table predates per-commit records: CDF needs the commit "
-            "log; resume from a snapshot"
-        )
-    added: list[str] = []
-    removed: list[str] = []
-    for c in walked:
-        if c["kind"] == "append":
-            added += c["added"]
-        elif c["kind"] in ("replace", "rename"):
-            continue  # layout / metadata change, zero row delta
-        elif c["kind"] in ("delete", "upsert"):
-            if not c.get("recorded"):
-                raise ValueError(
-                    f"{c['kind']} commit at v{c['at']} did not record "
-                    "its changes; re-commit with record_changes=True "
-                    "or resume from a snapshot"
-                )
-            added += c.get("added", [])
-            removed += [
-                p
-                for d in c["deletes"]
-                if int(d["at"]) == c["at"]
-                for p in d.get("removed", [])
-            ]
-        else:
-            raise ValueError(
-                f"{c['kind']} commit at v{c['at']}: not representable "
-                "as changes; resume from a snapshot"
-            )
-    added, removed = sorted(added), sorted(removed)
+    added, removed = _changed_files(root, from_version, to_version, True)
     if not added and not removed:
         return _zero_rows(spark, root, to_version).withColumn(
             "_change_type", F.lit("insert")
         )
     mt = _resolve_state(root, to_version)
-    parts = []
-    if added:
-        parts.append(
-            _read_files(spark, mt, added).withColumn(
-                "_change_type", F.lit("insert")
-            )
-        )
-    if removed:
-        parts.append(
-            _read_files(spark, mt, removed).withColumn(
-                "_change_type", F.lit("delete")
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    parts = [
+        _read_files(spark, mt, fs).withColumn("_change_type", F.lit(tag))
+        for tag, fs in (("insert", added), ("delete", removed))
+        if fs
+    ]
+    return reduce(DataFrame.unionByName, parts)
 
 
 def table_history(root: str, limit: int | None = None) -> list[dict]:
     """The commit log, newest first (Delta's DESCRIBE HISTORY shape):
     one dict per retained version with ``version``, ``ts`` (commit
-    wall-time; None on pre-r15 manifests), ``kind`` (append / rewrite
-    / delete / replace / rename; None on pre-commit-record
-    checkpoints), ``n_added`` staged files, ``run_id``, and
+    wall-time), ``kind`` (append / rewrite / delete / upsert / replace
+    / rename), ``n_added`` staged files, ``run_id``, and
     ``checkpoint`` (whether the manifest is a full snapshot).
     Checkpoint rows also carry ``n_live_files``.  Stops at the vacuum
     horizon.  Driver-side metadata only — no Spark job; ``limit``
@@ -2367,28 +2022,18 @@ def table_history(root: str, limit: int | None = None) -> list[dict]:
             m = _read_manifest(root, v)
         except FileNotFoundError:
             break  # vacuumed below here
-        if "delta" in m:
-            d = m["delta"]
-            rec = {
-                "version": v,
-                "ts": m.get("ts"),
-                "kind": d["kind"],
-                "n_added": len(d.get("added", [])),
-                "run_id": d.get("run_id"),
-                "checkpoint": False,
-            }
-        else:
-            c = m.get("commit") or {}
-            ledger = m.get("run_ids") or []
-            rec = {
-                "version": v,
-                "ts": m.get("ts"),
-                "kind": c.get("kind"),
-                "n_added": len(c.get("added", [])),
-                "run_id": ledger[-1] if ledger else None,
-                "checkpoint": True,
-                "n_live_files": len(m["files"]),
-            }
+        checkpoint = "delta" not in m
+        c = m["commit"] if checkpoint else _commit_record(m["delta"])
+        rec = {
+            "version": v,
+            "ts": m["ts"],
+            "kind": c["kind"],
+            "n_added": len(c["added"]),
+            "run_id": m["run_ids"][-1] if checkpoint else m["delta"]["run_id"],
+            "checkpoint": checkpoint,
+        }
+        if checkpoint:
+            rec["n_live_files"] = len(m["files"])
         out.append(rec)
         v -= 1
     return out
@@ -2491,7 +2136,7 @@ def vacuum(
                 refs.update(e.get("removed", []))
             return refs
         refs = set(m["files"])
-        for d in m.get("deletes", []):
+        for d in m["deletes"]:
             refs.add(d["path"])
             refs.update(d.get("removed", []))
         return refs
@@ -2506,7 +2151,7 @@ def vacuum(
         m = _read_manifest(root, v)
         state = m if "files" in m else _apply_delta(state, m)
         live.update(state["files"])
-        for d in state.get("deletes", []):
+        for d in state["deletes"]:
             live.add(d["path"])
             live.update(d.get("removed", []))
     ever_referenced: set[str] = set()

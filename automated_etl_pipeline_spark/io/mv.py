@@ -197,13 +197,11 @@ class IncrementalAggView:
             partial = self._partials(delta)
             mode = "incremental"
         except (ValueError, FileNotFoundError):
-            # ValueError: non-append commits in the range.
-            # FileNotFoundError: a legacy (pre-commit-record) table
-            # whose from_version manifest was vacuumed — the set-diff
-            # fallback inside read_changes resolves the FROM endpoint
-            # directly and surfaces the miss as FileNotFoundError,
-            # which must trigger the same full-recompute ladder as a
-            # ValueError (r14 ADVICE: it used to escape refresh()).
+            # ValueError: non-append commits in the range, or a
+            # manifest in it already vacuumed.  FileNotFoundError: the
+            # TO snapshot is unreadable or names no data files — both
+            # take the same full-recompute ladder (r14 ADVICE: a miss
+            # used to escape refresh()).
             try:
                 # the range has deletes but they recorded their victim
                 # rows (commit_delete(record_changes=True)): fold the

@@ -6678,7 +6678,7 @@ def zone_map_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                 binned.filter(F.col("bin") == b).drop("bin").coalesce(1),
                 root,
                 f"bin-{b}",
-                stats_col="s_acctbal",
+                stats_cols=["s_acctbal"],
             )
         pruned, n_total, n_scanned = read_table_pruned(
             spark, root, "s_acctbal", 7000.0, 9000.0
@@ -8053,7 +8053,7 @@ def manifest_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((k % 7 == 0).cast("long")).alias("n_mod"),
             F.sum((k % 7 == 3).cast("long")).alias("n_new"),
         ).collect()[0]
-        n_mod, n_new = _c["n_mod"], _c["n_new"]
+        n_mod, n_new = _c["n_mod"] or 0, _c["n_new"] or 0  # NULL on empty orders
         cdf = read_changes_cdf(spark, root, 1, 2)
         # one conditional aggregate instead of two count() jobs over
         # the change feed (r15 opt, guide §2.4): same integers, one scan

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import tempfile
 
@@ -64,13 +65,10 @@ def test_version_race_retries_not_overwrites(spark, root):
     the competitor's manifest intact."""
     commit_append(_df(spark, 0, 5), root, "r1")
     # competitor publishes v2 out from under us
-    competitor = {
-        "version": 2,
-        "files": json.load(
-            open(os.path.join(root, "_manifest", "v0000000001.json"))
-        )["files"],
-        "run_ids": ["r1", "competitor"],
-    }
+    competitor = json.load(
+        open(os.path.join(root, "_manifest", "v0000000001.json"))
+    )
+    competitor.update(version=2, run_ids=["r1", "competitor"])
     with open(os.path.join(root, "_manifest", "v0000000002.json"), "x") as f:
         json.dump(competitor, f)
     v = commit_append(_df(spark, 5, 9), root, "r2")
@@ -120,7 +118,7 @@ def test_zone_map_prunes_and_is_conservative(spark, root):
     # three files with disjoint ranges, stats recorded
     for lo, hi, rid in [(0, 10, "a"), (100, 110, "b"), (200, 210, "c")]:
         commit_append(
-            _df(spark, lo, hi).coalesce(1), root, rid, stats_col="k"
+            _df(spark, lo, hi).coalesce(1), root, rid, stats_cols=["k"]
         )
     df, total, scanned = read_table_pruned(spark, root, "k", 100, 105)
     assert (total, scanned) == (3, 1)
@@ -218,8 +216,8 @@ def test_rewrite_trims_stale_stats_and_manifest_stays_bounded(spark, root):
         commit_rewrite,
     )
 
-    commit_append(_df(spark, 0, 10), root, "r1", stats_col="k")
-    commit_append(_df(spark, 10, 20), root, "r2", stats_col="k")
+    commit_append(_df(spark, 0, 10), root, "r1", stats_cols=["k"])
+    commit_append(_df(spark, 10, 20), root, "r2", stats_cols=["k"])
     v = commit_rewrite(_df(spark, 0, 20).coalesce(1), root, "compact-1")
     m = _resolve_state(root, v)
     # every stats key references a live file; the superseded files'
@@ -396,26 +394,22 @@ def test_multicol_stats_prune_conjunctively(spark, root):
     assert (total3, scanned3) == (4, 2)
 
 
-def test_legacy_single_column_stats_list_still_prunes(spark, root):
-    """Manifests written before r14 store stats as a bare [mn, mx]
-    list (no column name); the reader applies them to whatever column
-    the caller asks about — the documented legacy assumption."""
+def test_old_format_stats_manifest_raises_named_error(spark, root):
+    """A full manifest in the pre-r14 shape (bare [mn, mx] stats, no
+    commit record, schema, added_at, deletes or ts) is refused with a
+    ValueError naming the version and every missing key."""
     import json as _json
 
     from automated_etl_pipeline_spark.io.manifest import (
         _manifest_dir,
+        _resolve_state,
         read_table_pruned,
     )
 
-    from automated_etl_pipeline_spark.io.manifest import _resolve_state
-
-    commit_append(_df(spark, 0, 10).coalesce(1), root, "a", stats_col="k")
-    commit_append(_df(spark, 10, 20).coalesce(1), root, "b", stats_col="k")
-    # forge the newest manifest into the PRE-r14 shape: a full
-    # snapshot (pre-delta tables had no delta manifests) whose stats
-    # are bare [mn, mx] lists without column names
+    commit_append(_df(spark, 0, 10).coalesce(1), root, "a", stats_cols=["k"])
+    commit_append(_df(spark, 10, 20).coalesce(1), root, "b", stats_cols=["k"])
     st = _resolve_state(root, 2)
-    legacy = {
+    old = {
         "version": 2,
         "files": st["files"],
         "run_ids": st["run_ids"],
@@ -424,9 +418,12 @@ def test_legacy_single_column_stats_list_still_prunes(spark, root):
     path = os.path.join(_manifest_dir(root), "v0000000002.json")
     os.unlink(path)
     with open(path, "w") as f:
-        _json.dump(legacy, f)
-    _, total, scanned = read_table_pruned(spark, root, "k", 3, 4)
-    assert (total, scanned) == (2, 1)
+        _json.dump(old, f)
+    missing = "['added_at', 'commit', 'deletes', 'schema', 'ts']"
+    with pytest.raises(ValueError, match=r"v2 .*" + re.escape(missing)):
+        _resolve_state(root, 2)
+    with pytest.raises(ValueError, match=re.escape(missing)):
+        read_table_pruned(spark, root, "k", 3, 4)
 
 
 # ---- merge-on-read equality deletes (r14) --------------------------------
@@ -569,8 +566,8 @@ def test_pruned_read_applies_pending_deletes(spark, root):
         read_table_pruned,
     )
 
-    commit_append(_df(spark, 0, 100), root, "a1", stats_col="k")
-    commit_append(_df(spark, 100, 200), root, "a2", stats_col="k")
+    commit_append(_df(spark, 0, 100), root, "a1", stats_cols=["k"])
+    commit_append(_df(spark, 100, 200), root, "a2", stats_cols=["k"])
     commit_delete(_keys(spark, 150, 199, 10), root, "d1", ["k"])
     df, total, scanned = read_table_pruned(spark, root, "k", 100, 250)
     assert scanned < total
@@ -968,9 +965,9 @@ def test_stats_commit_works_under_uri_hostile_root(spark):
 
     root = tempfile.mkdtemp(prefix="manifest test with space ")
     try:
-        commit_append(_df(spark, 0, 10).coalesce(1), root, "a1", stats_col="k")
+        commit_append(_df(spark, 0, 10).coalesce(1), root, "a1", stats_cols=["k"])
         commit_append(
-            _df(spark, 100, 110).coalesce(1), root, "a2", stats_col="k"
+            _df(spark, 100, 110).coalesce(1), root, "a2", stats_cols=["k"]
         )
         df, total, scanned = read_table_pruned(spark, root, "k", 0, 50)
         assert (total, scanned) == (2, 1)
@@ -1059,26 +1056,130 @@ def test_resolution_equals_per_version_reads_across_commit_kinds(
         assert read_table(spark, root, version=v).count() == n, v
 
 
-def test_delta_chain_onto_legacy_full_manifest(spark, root):
-    """A pre-r14 table (hand-written full manifest, no commit record)
-    keeps working as the checkpoint base of new delta commits."""
+def _schema_json(**cols):
+    from pyspark.sql.types import StructType
+
+    s = StructType()
+    for name, typ in cols.items():
+        s = s.add(name, typ, True)
+    return s.json()
+
+
+def _publish_mixed_history(root, data_dir):
+    """append -> upsert -> recorded delete -> replace -> rename ->
+    append -> rewrite -> append, through ``_publish`` alone: fixed file
+    paths (never read), pinned commit times, stats, bloom refs and
+    column ids all in play."""
+    from automated_etl_pipeline_spark.io.manifest import _publish
+
+    def p(name):
+        return os.path.join(data_dir, name)
+
+    kv = _schema_json(k="long", v="long")
+    bloom = {"m": 64, "k": 4}
+    commits = [
+        ({"kind": "append", "schema": kv, "added": [p("a1"), p("a2")],
+          "stats": {p("a1"): {"k": [0, 9]}, p("a2"): {"k": [10, 19]}},
+          "bloom_refs": {p("a1"): p("s1"), p("a2"): p("s1")},
+          "bloom_meta": bloom}, {}),
+        ({"kind": "upsert", "schema": kv, "added": [p("u1")],
+          "stats": {p("u1"): {"k": [5, 6]}},
+          "bloom_refs": {p("u1"): p("s2")}, "bloom_meta": bloom,
+          "entries": [{"path": p("uk1"), "cols": ["k"]}],
+          "recorded": False}, {}),
+        ({"kind": "delete", "entries": [
+            {"path": p("dk1"), "cols": ["k"], "removed": [p("vic1")]}],
+          "recorded": True}, {"expected_base": 2}),
+        ({"kind": "replace", "schema": kv, "added": [p("c1")],
+          "removed": [p("a1"), p("a2")],
+          "stats": {p("c1"): {"k": [0, 19]}}}, {"expected_base": 3}),
+        ({"kind": "rename", "renames": {"v": "w"}}, {}),
+        ({"kind": "append", "added": [p("a3")],
+          "schema": _schema_json(k="long", w="long", x="string"),
+          "stats": {p("a3"): {"k": [20, 29], "x": ["a", "b"]}}}, {}),
+        ({"kind": "rewrite", "added": [p("r1")],
+          "schema": _schema_json(k="long", x="string")},
+         {"expected_base": 6}),
+        ({"kind": "append", "added": [p("a4")],
+          "schema": _schema_json(k="long", x="string"),
+          "stats": {p("a4"): {"k": [30, 39]}}}, {}),
+    ]
+    for i, (delta, kw) in enumerate(commits):
+        v = _publish(root, f"run-{i}", delta, commit_ts=1000.0 + i, **kw)
+        assert v == i + 1
+    return len(commits)
+
+
+def test_writer_checkpoints_equal_delta_replay(tmp_path, monkeypatch):
+    """Every version of a mixed-kind history resolves to the SAME
+    state whether the writer published it as a checkpoint
+    (CHECKPOINT_EVERY=1) or readers replay it from deltas
+    (CHECKPOINT_EVERY=1000) — the writer and the replay are one
+    transition, compared key by key, not by row counts."""
+    import automated_etl_pipeline_spark.io.manifest as mf
+
+    roots = {}
+    for every in (1, 1000):
+        monkeypatch.setattr(mf, "CHECKPOINT_EVERY", every)
+        roots[every] = str(tmp_path / f"every{every}")
+        n = _publish_mixed_history(roots[every], str(tmp_path / "data"))
+    keys = {
+        "version", "files", "added_at", "deletes", "stats", "bloom_refs",
+        "bloom_meta", "field_ids", "file_fields", "schema", "commit",
+        "run_ids", "ts",
+    }
+    for v in range(1, n + 1):
+        ck = mf._resolve_state(roots[1], v)
+        rp = mf._resolve_state(roots[1000], v)
+        assert set(ck) == set(rp), v
+        assert set(ck) <= keys, v
+        for key in ck:
+            assert ck[key] == rp[key], (v, key)
+    # the replayed root really replays: only v1, the rename (v5) and
+    # the rewrite (v7) are checkpoints there
+    full = [
+        v
+        for v in range(1, n + 1)
+        if "files" in mf._read_manifest(roots[1000], v)
+    ]
+    assert full == [1, 5, 7]
+    tip = mf._resolve_state(roots[1000], n)
+    assert [c["kind"] for c in (
+        mf._resolve_state(roots[1000], v)["commit"] for v in range(1, n + 1)
+    )] == ["append", "upsert", "delete", "replace", "rename", "append",
+           "rewrite", "append"]
+    assert tip["deletes"] == []  # the rewrite materialized them
+    assert tip["field_ids"] == {"k": 1, "x": 3}  # w's id retired
+    assert tip["ts"] == 1007.0
+    v5 = mf._resolve_state(roots[1000], 5)
+    assert v5["deletes"][0]["as"] == ["k"]
+    assert v5["bloom_meta"] == {"m": 64, "k": 4}
+    assert set(v5["bloom_refs"]) == {str(tmp_path / "data" / "u1")}
+
+
+def test_old_format_checkpoint_under_delta_raises_named_error(spark, root):
+    """A delta commit cannot chain onto a hand-written pre-r14 full
+    manifest: resolving the delta (and committing on top) names the
+    base version and its missing keys instead of guessing defaults."""
     import json as _json
 
-    from automated_etl_pipeline_spark.io.manifest import _manifest_dir
+    from automated_etl_pipeline_spark.io.manifest import (
+        _manifest_dir,
+        _resolve_state,
+    )
 
-    stage = os.path.join(root, "data", "legacy")
-    _df(spark, 0, 7).coalesce(1).write.parquet(stage)
-    files = [
-        os.path.join(stage, f)
-        for f in sorted(os.listdir(stage))
-        if f.endswith(".parquet")
-    ]
-    os.makedirs(_manifest_dir(root), exist_ok=True)
-    with open(os.path.join(_manifest_dir(root), "v0000000001.json"), "x") as f:
-        _json.dump({"version": 1, "files": files, "run_ids": ["legacy"]}, f)
-    commit_append(_df(spark, 7, 10), root, "a2")  # v2: a delta on top
-    assert read_table(spark, root).count() == 10
-    assert read_table(spark, root, version=1).count() == 7
+    commit_append(_df(spark, 0, 7), root, "a1")  # v1 checkpoint
+    commit_append(_df(spark, 7, 10), root, "a2")  # v2 delta on top
+    path = os.path.join(_manifest_dir(root), "v0000000001.json")
+    files = _json.load(open(path))["files"]
+    os.unlink(path)
+    with open(path, "w") as f:
+        _json.dump({"version": 1, "files": files, "run_ids": ["a1"]}, f)
+    missing = "['added_at', 'commit', 'deletes', 'schema', 'stats', 'ts']"
+    with pytest.raises(ValueError, match=r"v1 .*" + re.escape(missing)):
+        _resolve_state(root, 2)
+    with pytest.raises(ValueError, match=re.escape(missing)):
+        commit_append(_df(spark, 10, 12), root, "a3")
 
 
 def test_vacuum_never_strands_a_surviving_manifest(spark, root):
@@ -1145,8 +1246,8 @@ def test_resolve_state_absorbs_backend_visibility_lag(spark, root):
     f2 = os.path.join(root, "x2.parquet")
     open(f1, "wb").close()
     open(f2, "wb").close()
-    _publish(root, "r1", [f1], {}, lambda c, n: c + n, backend=inner)  # v1 full
-    _publish(root, "r2", [f2], {}, lambda c, n: c + n, backend=inner)  # v2 delta
+    _publish(root, "r1", {"kind": "append", "added": [f1]}, backend=inner)  # v1 full
+    _publish(root, "r2", {"kind": "append", "added": [f2]}, backend=inner)  # v2 delta
     laggy = LaggyReads(inner, lag_version=1, misses=2)
     st = _resolve_state(root, 2, backend=laggy)
     assert set(st["files"]) == {f1, f2}

@@ -98,8 +98,7 @@ class TestBloomPacking:
     def test_packed_word_fold_matches_python_packer(self, spark, root):
         """r15 opt: the codegen bit_or packed-word build must produce
         the BYTE-IDENTICAL hexmap the Python packer yields over the
-        same keys (word-aligned bits), and the non-aligned fallback
-        path must stay live and agree with it semantically."""
+        same keys."""
         import glob
         import json
         import os
@@ -116,21 +115,12 @@ class TestBloomPacking:
         ).write.parquet(stage)
         files = sorted(glob.glob(os.path.join(stage, "*.parquet")))
         assert len(files) == 1
-        # word-aligned: packed bit_or path
         _, refs = _collect_file_metadata(spark, files, [], ["k"], 256)
         built = json.load(open(refs[files[0]]))[files[0]]["k"]
         expect = _bloom_pack(
             {p for v in vals for p in _bloom_py_positions(v, 256)}, 256
         )
         assert built == expect
-        # non-aligned (bits % 64 != 0): collect_set fallback, same
-        # semantics under the probe
-        _, refs2 = _collect_file_metadata(spark, files, [], ["k"], 240)
-        built2 = json.load(open(refs2[files[0]]))[files[0]]["k"]
-        expect2 = _bloom_pack(
-            {p for v in vals for p in _bloom_py_positions(v, 240)}, 240
-        )
-        assert built2 == expect2
 
     def test_point_lookup_prunes_and_is_exact(self, spark, root):
         for i in range(4):
@@ -192,6 +182,21 @@ class TestBloomPacking:
                 bloom_cols=["k"],
                 bloom_bits=4096,
             )
+
+    def test_bloom_bits_must_be_word_multiple(self, spark, root):
+        """Bitmaps are built and stored as whole 64-bit words: a
+        bloom_bits that is not a positive multiple of 64 is refused by
+        name before anything is staged or committed."""
+        import os
+
+        for bits in (100, 0, -64):
+            with pytest.raises(ValueError, match=f"bloom_bits={bits} "):
+                commit_append(
+                    _kv(spark, 0, 10), root, "a0", bloom_cols=["k"],
+                    bloom_bits=bits,
+                )
+        assert current_version(root) == 0
+        assert not os.path.exists(os.path.join(root, "data"))
 
     def test_unbloomed_commit_keeps_file_readable(self, spark, root):
         """A commit without bloom_cols on a bloom table: its files
@@ -593,6 +598,25 @@ class TestAtomicUpsert:
         assert out.filter(F.col("k") == 10).collect()[0]["v"] == 100
         # inserted key present
         assert out.filter(F.col("k") == 149).collect()[0]["v"] == 149000
+
+    def test_upsert_merge_gate_on_empty_orders(self, spark, tmp_path):
+        """The ``manifest_upsert_merge`` gate on an EMPTY orders table
+        (the sf0.001 schema, zero rows) matches its oracle instead of
+        crashing on the NULL sums of an empty aggregate."""
+        import pyarrow.parquet as pq
+
+        from automated_etl_pipeline_spark.queries_ext import (
+            _UPSERT_MERGE_ORACLE,
+            manifest_upsert_merge,
+        )
+        from tests.test_probes import SF_DIR, _check_against
+
+        src = pq.read_table(f"{SF_DIR}/orders.parquet")
+        pq.write_table(src.slice(0, 0), str(tmp_path / "orders.parquet"))
+        _check_against(
+            spark, "manifest_upsert_merge", str(tmp_path),
+            manifest_upsert_merge, _UPSERT_MERGE_ORACLE,
+        )
 
     def test_upsert_idempotent_replay(self, spark, root):
         from automated_etl_pipeline_spark.io.manifest import commit_upsert

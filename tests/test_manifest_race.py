@@ -42,13 +42,7 @@ def _append_worker(root: str, pid: int, n_commits: int, barrier) -> None:
     barrier.wait()  # maximize contention: all children publish at once
     for i in range(n_commits):
         path = _stage_one_file(root, pid * 1000 + i)
-        _publish(
-            root,
-            f"p{pid}-c{i}",
-            [path],
-            {},
-            lambda cur, new: cur + new,
-        )
+        _publish(root, f"p{pid}-c{i}", {"kind": "append", "added": [path]})
 
 
 def _dup_runid_worker(root: str, pid: int, barrier, out_q) -> None:
@@ -56,7 +50,7 @@ def _dup_runid_worker(root: str, pid: int, barrier, out_q) -> None:
 
     path = _stage_one_file(root, 9000 + pid)
     barrier.wait()
-    v = _publish(root, "dup-run", [path], {}, lambda cur, new: cur + new)
+    v = _publish(root, "dup-run", {"kind": "append", "added": [path]})
     out_q.put((pid, path, v))
 
 
@@ -175,11 +169,7 @@ def test_publish_matches_commit_append_protocol(spark, root):
         spark.range(0, 5).select(F.col("id").alias("payload")), root, "spark-1"
     )
     _publish(
-        root,
-        "raw-1",
-        [_stage_one_file(root, 100)],
-        {},
-        lambda cur, new: cur + new,
+        root, "raw-1", {"kind": "append", "added": [_stage_one_file(root, 100)]}
     )
     commit_append(
         spark.range(5, 8).select(F.col("id").alias("payload")), root, "spark-2"
@@ -206,9 +196,7 @@ def _conflict_rewrite_worker(root: str, barrier, out_q) -> None:
         v = _publish(
             root,
             "rewrite-race",
-            [path],
-            {},
-            lambda cur, new: new,
+            {"kind": "rewrite", "added": [path]},
             expected_base=base,
         )
         out_q.put(("win", base, len(base_files), v))
@@ -293,14 +281,14 @@ def test_lost_ack_publish_is_resolved_not_doubled(root):
 
     b = _fault_backend(lost_ack_versions=(1,))
     f1 = _stage_one_file(root, 1)
-    v = _publish(root, "run-a", [f1], {}, lambda cur, new: cur + new, backend=b)
+    v = _publish(root, "run-a", {"kind": "append", "added": [f1]}, backend=b)
     assert v == 1
     assert current_version(root, backend=b) == 1
     m = _resolve_state(root, 1, backend=b)
     assert m["files"] == [f1] and m["run_ids"] == ["run-a"]
     # an independent commit lands cleanly on top
     f2 = _stage_one_file(root, 2)
-    v2 = _publish(root, "run-b", [f2], {}, lambda cur, new: cur + new, backend=b)
+    v2 = _publish(root, "run-b", {"kind": "append", "added": [f2]}, backend=b)
     assert v2 == 2
     assert _resolve_state(root, 2, backend=b)["files"] == [f1, f2]
 
@@ -322,7 +310,7 @@ def test_delayed_visibility_append_chain_loses_nothing(root):
         f = _stage_one_file(root, i)
         staged.append(f)
         v = _publish(
-            root, f"run-{i}", [f], {}, lambda cur, new: cur + new, backend=b
+            root, f"run-{i}", {"kind": "append", "added": [f]}, backend=b
         )
         assert v == i + 1
     # drain any remaining visibility lag, then check the chain
@@ -351,14 +339,14 @@ def test_delayed_visibility_rewrite_still_conflicts(root):
 
     b = _fault_backend(hidden_reads=3)
     f1 = _stage_one_file(root, 1)
-    _publish(root, "base", [f1], {}, lambda cur, new: cur + new, backend=b)
+    _publish(root, "base", {"kind": "append", "added": [f1]}, backend=b)
     for _ in range(5):
         current_version(root, backend=b)  # make v1 visible
     assert current_version(root, backend=b) == 1
 
     # appender wins v2 (invisible for the next 3 reads)
     f2 = _stage_one_file(root, 2)
-    _publish(root, "append", [f2], {}, lambda cur, new: cur + new, backend=b)
+    _publish(root, "append", {"kind": "append", "added": [f2]}, backend=b)
 
     # rewriter computed from v1; its first reads still see v1
     f3 = _stage_one_file(root, 3)
@@ -366,9 +354,7 @@ def test_delayed_visibility_rewrite_still_conflicts(root):
         _publish(
             root,
             "rewrite",
-            [f3],
-            {},
-            lambda cur, new: new,
+            {"kind": "rewrite", "added": [f3]},
             expected_base=1,
             backend=b,
         )
@@ -392,7 +378,7 @@ def test_torn_first_read_is_retried(root):
 
     b = _fault_backend(torn_versions=(1,))
     f1 = _stage_one_file(root, 1)
-    _publish(root, "base", [f1], {}, lambda cur, new: cur + new, backend=b)
+    _publish(root, "base", {"kind": "append", "added": [f1]}, backend=b)
     # the first read of v1 is torn; _resolve_state's bounded retry
     # absorbs it
     m = _resolve_state(root, 1, backend=b)
@@ -400,10 +386,10 @@ def test_torn_first_read_is_retried(root):
 
     b2 = _fault_backend(torn_versions=(1,))
     f2 = _stage_one_file(root, 2)
-    _publish(root, "base2", [f2], {}, lambda cur, new: cur + new, backend=b2)
+    _publish(root, "base2", {"kind": "append", "added": [f2]}, backend=b2)
     # committer whose loop re-read hits the torn manifest
     f3 = _stage_one_file(root, 3)
-    v = _publish(root, "next", [f3], {}, lambda cur, new: cur + new, backend=b2)
+    v = _publish(root, "next", {"kind": "append", "added": [f3]}, backend=b2)
     assert v == 2
     assert _resolve_state(root, 2, backend=b2)["files"] == [f2, f3]
 
@@ -454,10 +440,11 @@ def _delete_worker(
     v = _publish(
         root,
         "race-delete",
-        [path],
-        {},
-        lambda cur, new: cur,
-        delete_cols=["payload"],
+        {
+            "kind": "delete",
+            "entries": [{"path": path, "cols": ["payload"]}],
+            "recorded": False,
+        },
     )
     out_q.put(("deleted_at", v))
 
@@ -537,11 +524,8 @@ def _replace_worker(root: str, barrier, out_q) -> None:
         v = _publish(
             root,
             "race-replace",
-            [merged],
-            {},
-            lambda cur, new: cur,
+            {"kind": "replace", "added": [merged], "removed": targets},
             expected_base=base,
-            replace_subset=targets,
         )
         out_q.put(("win", base, v))
     except CommitConflictError:
@@ -564,7 +548,7 @@ def test_replace_racing_delete_conflicts_or_precedes(spark, root):
         p = _stage_one_file(root, i)
         from automated_etl_pipeline_spark.io.manifest import _publish
 
-        _publish(root, f"seed{i}", [p], {}, lambda cur, new: cur + new)
+        _publish(root, f"seed{i}", {"kind": "append", "added": [p]})
     ctx = mp.get_context("spawn")
     barrier = ctx.Barrier(2)
     out_q = ctx.Queue()
@@ -616,11 +600,12 @@ def _upsert_worker(
     v = _publish(
         root,
         "race-upsert",
-        [key_path],
-        {},
-        lambda cur, new: cur,
-        delete_cols=["payload"],
-        upsert_data_files=[data_path],
+        {
+            "kind": "upsert",
+            "added": [data_path],
+            "entries": [{"path": key_path, "cols": ["payload"]}],
+            "recorded": False,
+        },
     )
     out_q.put(("upserted_at", v))
 

@@ -57,7 +57,7 @@ def run_mode(n_commits: int, checkpoint_every: int) -> dict:
                 for j, f in enumerate(files)
             }
             mf._publish(
-                root, f"c{i}", files, stats, lambda cur, new: cur + new
+                root, f"c{i}", {"kind": "append", "added": files, "stats": stats}
             )
             path = os.path.join(
                 mf._manifest_dir(root), f"v{i + 1:010d}.json"

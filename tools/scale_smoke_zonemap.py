@@ -10,7 +10,7 @@ Per shape R in (1, 4, 16):
 - orders (sf0.1) replicated Rx with jittered keys, committed to a
   manifest table as 8*R files range-partitioned + sorted on
   o_orderdate (the sorted layout a zordered/partitioned write
-  produces), stats_col=o_orderdate;
+  produces), stats_cols=[o_orderdate];
 - one fixed 3-month range query runs twice: via read_table_pruned
   (zone map) and via read_table (full snapshot), both with the row
   predicate applied;
@@ -61,7 +61,7 @@ def build_table(spark, sf_dir: str, rep: int, root: str) -> None:
     laid_out = reps.repartitionByRange(
         n_files, "o_orderdate"
     ).sortWithinPartitions("o_orderdate")
-    commit_append(laid_out, root, f"load-{rep}", stats_col="o_orderdate")
+    commit_append(laid_out, root, f"load-{rep}", stats_cols=["o_orderdate"])
 
 
 def timed_count(df) -> tuple[float, int]:
